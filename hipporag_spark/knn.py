@@ -166,9 +166,10 @@ def cosine_topk_with_stats(
     query; global stats are a tiny agg, so the full q×K score matrix never
     materializes anywhere.
     """
+    # materialized once without a CacheManager entry, which a per-call
+    # persist would leave behind
     out = _blocked_scores(spark, queries, keys, k, tile_size, n_blocks,
-                          id_col, vec_col, emit_stats=True).persist()
-    out.count()
+                          id_col, vec_col, emit_stats=True).localCheckpoint()
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("key_id"))
     topk = (
         out.where(~F.col("is_stat")).select("query_id", "key_id", "score")

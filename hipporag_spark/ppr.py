@@ -47,8 +47,12 @@ mid-iteration (``resume=True``).
 Beyond the single-query modes this module provides :func:`pagerank`
 (global uniform-teleport variant), :func:`personalized_pagerank_batch`
 (multi-query; distributed (query_id, node_id) dataframe mode above the
-local threshold), and the CSR-block paths :func:`ppr_from_blocks` /
-:func:`ppr_from_blocks_batched` over :func:`prepare_csr_blocks` layouts
+local threshold; below it a driver-numpy loop over a :class:`LocalGraph`
+operand, which :func:`prepare_local_graph` collects once so repeated
+calls over one graph — the retriever's — re-collect only their reset
+vector, with no separate emptiness pre-pass), and the CSR-block paths
+:func:`ppr_from_blocks` / :func:`ppr_from_blocks_batched` over
+:func:`prepare_csr_blocks` layouts
 — the throughput/benchmark path, with the round-2 "relabeled"
 identity-permutation layout (contiguous per-task slices, single-gather
 folded kernel).
@@ -66,6 +70,10 @@ from pyspark.sql import functions as F
 
 from .checkpoint import CheckpointStore
 from .graph import symmetrize
+
+
+# symmetrized edge count up to which batch PPR runs in driver numpy
+LOCAL_EDGE_LIMIT = 2_000_000
 
 
 @dataclass
@@ -179,13 +187,13 @@ def pagerank(
 
 def personalized_pagerank_batch(
     spark: SparkSession,
-    edges: DataFrame,
+    edges: DataFrame | LocalGraph,
     resets: DataFrame,  # (query_id, node_id, reset_weight)
     damping: float = 0.85,
     tol: float = 1e-9,
     max_iter: int = 500,
     mode: str = "auto",
-    local_edge_limit: int = 2_000_000,
+    local_edge_limit: int = LOCAL_EDGE_LIMIT,
     n_blocks: int | None = None,  # blocks mode: dst-block count (default cores)
     salt: int = 16,
     checkpoint_dir: str | None = None,
@@ -204,11 +212,19 @@ def personalized_pagerank_batch(
     < tol.  Semantics per query are identical to
     :func:`personalized_pagerank` (clamp, normalize, dangling, damping).
 
-    Two physical strategies:
+    ``edges`` is either a DataFrame of directed edge rows ``(src, dst,
+    weight[, relation])`` or a :class:`LocalGraph` prepared once by
+    :func:`prepare_local_graph`, which pins ``mode='local'``.
+
+    Physical strategies:
 
     ``mode='local'`` (auto when symmetrized edges ≤ ``local_edge_limit``)
-        One collect of the edge list; the (n_nodes × n_queries) rank
-        matrix iterates in driver numpy.  Small-graph fast path only.
+        The (n_nodes × n_queries) rank matrix iterates in driver numpy
+        over a :class:`LocalGraph`.  Given an edge DataFrame, the graph is
+        prepared on the fly (one collect of the symmetrized edges); given
+        a prepared graph, the call collects nothing but the reset vector,
+        once, and an empty reset vector returns an empty frame without a
+        separate emptiness pass.  Small-graph fast path only.
 
     ``mode='dataframe'`` (auto between the two limits)
         Rank state is a distributed ``(query_id, node_id, rank)`` table;
@@ -252,16 +268,17 @@ def personalized_pagerank_batch(
     returned row; callers that rank top-k by score desc get identical
     results whenever k rows have nonzero scores.
     """
-    sym = symmetrize(edges).persist()
     w = F.col("reset_weight").cast("double")
     resets_c = resets.select(
         "query_id",
         "node_id",
         F.when(F.isnan(w) | (w < 0), F.lit(0.0)).otherwise(w).alias("reset_weight"),
     )
-    if resets_c.isEmpty():  # no queries (e.g. rerank dropped every fact)
-        sym.unpersist()
-        return spark.createDataFrame([], "query_id string, node_id string, score double")
+    if isinstance(edges, LocalGraph):
+        if mode not in ("auto", "local"):
+            raise ValueError(f"a prepared LocalGraph runs in mode 'local', not {mode!r}")
+        return _batch_local(spark, edges, resets_c, damping, tol, max_iter, output_nodes)
+    sym = symmetrize(edges).persist()
     if mode == "auto":
         # only auto needs the edge count; a pinned mode (e.g. the retrieve
         # gate's mode='dataframe') must not pay an extra pass over sym —
@@ -273,14 +290,18 @@ def personalized_pagerank_batch(
             mode = "blocks"
         else:
             mode = "dataframe"
+    if mode == "local":
+        graph = _local_graph(sym)
+        sym.unpersist()
+        return _batch_local(spark, graph, resets_c, damping, tol, max_iter, output_nodes)
+    if resets_c.isEmpty():  # no queries (e.g. rerank dropped every fact)
+        sym.unpersist()
+        return _empty_scores(spark)
     if mode == "csr":  # legacy alias for the pre-round-2 driver-matrix path
         mode = "dataframe"
     store = CheckpointStore(checkpoint_dir) if checkpoint_dir else None
 
-    if mode == "local":
-        out = _batch_local(spark, sym, resets_c, damping, tol, max_iter,
-                           output_nodes)
-    elif mode == "blocks":
+    if mode == "blocks":
         out = _batch_blocks(spark, edges, sym, resets_c, damping, tol,
                             max_iter, output_nodes, n_blocks, blocks_dir,
                             query_chunk)
@@ -292,46 +313,79 @@ def personalized_pagerank_batch(
     return out
 
 
-def _batch_local(spark, sym, resets_c, damping, tol, max_iter,
-                 output_nodes=None) -> DataFrame:
-    """Driver-numpy rank-matrix loop (small graphs).  Node order = sorted
-    node_id, query order = sorted query_id — the same deterministic
-    ordering the distributed path's output is compared against."""
+@dataclass(frozen=True)
+class LocalGraph:
+    """Driver-local batch-PPR operand: a symmetrized edge table collected
+    once (:func:`prepare_local_graph`) and reusable by every
+    :func:`personalized_pagerank_batch` call over the same graph."""
+    nodes: pd.Index        # sorted edge endpoints; position = node index
+    src: np.ndarray        # int64 node index per edge with out-weight > 0
+    dst: np.ndarray        # int64
+    weight: np.ndarray     # float64 weight / out-weight(src)
+    dangling: np.ndarray   # bool per node: zero incident weight
+
+
+def _local_graph(sym: DataFrame) -> LocalGraph:
+    """Collects ``(src, dst, weight)`` symmetrized rows into a :class:`LocalGraph`."""
     epdf = sym.toPandas()
+    nodes = pd.Index(np.unique(epdf["src"].to_numpy(dtype=object)))
+    src = nodes.get_indexer(epdf["src"]).astype(np.int64)
+    dst = nodes.get_indexer(epdf["dst"]).astype(np.int64)
+    wts = epdf["weight"].to_numpy(dtype=np.float64)
+    out_w = np.zeros(len(nodes), dtype=np.float64)
+    np.add.at(out_w, src, wts)
+    keep = out_w[src] > 0
+    src, dst = src[keep], dst[keep]
+    return LocalGraph(nodes, src, dst, wts[keep] / out_w[src], out_w <= 0.0)
+
+
+def prepare_local_graph(edges: DataFrame, max_edges: int | None = None) -> LocalGraph | None:
+    """Symmetrizes directed edge rows ``(src, dst, weight[, relation])`` and
+    collects them into a :class:`LocalGraph`; ``None`` when the
+    symmetrized table holds more than ``max_edges`` rows (then nothing is
+    collected)."""
+    sym = symmetrize(edges).persist()
+    try:
+        if max_edges is not None and sym.count() > max_edges:
+            return None
+        return _local_graph(sym)
+    finally:
+        sym.unpersist()
+
+
+def _empty_scores(spark) -> DataFrame:
+    return spark.createDataFrame([], "query_id string, node_id string, score double")
+
+
+def _batch_local(spark, graph: LocalGraph, resets_c, damping, tol, max_iter,
+                 output_nodes=None) -> DataFrame:
+    """Driver-numpy rank-matrix loop (small graphs) over a prepared
+    :class:`LocalGraph`.  The reset vector is collected once; reset nodes
+    that are not edge endpoints join the universe as isolated (dangling)
+    nodes after the prepared ones.  Query order = sorted query_id."""
     rpdf = resets_c.toPandas()
-    node_ids = np.unique(
-        np.concatenate([
-            epdf["src"].to_numpy(dtype=object),
-            rpdf["node_id"].to_numpy(dtype=object),
-        ])
-    )
-    pos = {k: i for i, k in enumerate(node_ids)}
+    if not len(rpdf):  # no queries (e.g. rerank dropped every fact)
+        return _empty_scores(spark)
+    ridx = graph.nodes.get_indexer(rpdf["node_id"])
+    missing = ridx < 0
+    unseen = rpdf["node_id"].to_numpy(dtype=object)[missing]
+    extra = np.unique(unseen)
+    ridx[missing] = len(graph.nodes) + np.searchsorted(extra, unseen)
+    node_ids = np.concatenate([graph.nodes.to_numpy(dtype=object), extra])
+    dangling = np.concatenate([graph.dangling, np.ones(len(extra), dtype=bool)])
     n = len(node_ids)
-    qids = np.unique(rpdf["query_id"].to_numpy(dtype=object))
-    qpos = {q: j for j, q in enumerate(qids)}
+    qpos, qids = pd.factorize(rpdf["query_id"], sort=True)
     nq = len(qids)
 
     R = np.zeros((n, nq), dtype=np.float64)
-    if len(rpdf):
-        R[rpdf["node_id"].map(pos).to_numpy(), rpdf["query_id"].map(qpos).to_numpy()] = (
-            rpdf["reset_weight"].to_numpy(dtype=np.float64)
-        )
+    R[ridx, qpos] = rpdf["reset_weight"].to_numpy(dtype=np.float64)
     colsum = R.sum(axis=0)
     if (colsum <= 0).any():
         bad = [qids[j] for j in np.flatnonzero(colsum <= 0)]
         raise ValueError(f"reset vector sums to 0 for queries: {bad}")
     R = R / colsum
 
-    src_i = epdf["src"].map(pos).to_numpy(dtype=np.int64)
-    dst_i = epdf["dst"].map(pos).to_numpy(dtype=np.int64)
-    wts = epdf["weight"].to_numpy(dtype=np.float64)
-    out_w = np.zeros(n, dtype=np.float64)
-    np.add.at(out_w, src_i, wts)
-    dangling = out_w <= 0.0
-    keep = out_w[src_i] > 0
-    src_i, dst_i = src_i[keep], dst_i[keep]
-    wn = wts[keep] / out_w[src_i]
-
+    src_i, dst_i, wn = graph.src, graph.dst, graph.weight
     ranks = R.copy()
     for _ in range(max_iter):
         contrib = np.zeros((n, nq), dtype=np.float64)
@@ -344,23 +398,21 @@ def _batch_local(spark, sym, resets_c, damping, tol, max_iter,
         if delta < tol:
             break
 
-    keep_nodes = None
+    pdf_out = pd.DataFrame({
+        "query_id": np.repeat(np.asarray(qids, dtype=object), n),
+        "node_id": np.tile(node_ids, nq),
+        "score": ranks.T.ravel(),
+    })
     if output_nodes is not None:
-        # same sparse contract as the dataframe mode: rows only for
-        # filter nodes with nonzero converged rank (absent ≡ 0.0)
-        keep_nodes = {
-            r["node_id"] for r in output_nodes.select("node_id").distinct().collect()
-        }
-    frames = []
-    for j, q in enumerate(qids):
-        f = pd.DataFrame({"query_id": q, "node_id": node_ids, "score": ranks[:, j]})
-        if keep_nodes is not None:
-            f = f[f["node_id"].isin(keep_nodes) & (f["score"] != 0.0)]
-        frames.append(f)
-    pdf_out = pd.concat(frames, ignore_index=True)
+        # same sparse contract as the dataframe mode: rows only for filter
+        # nodes with nonzero converged rank (absent ≡ 0.0); the filter is
+        # a semi-join in the returned plan, not a collect of the filter
+        pdf_out = pdf_out[pdf_out["score"] != 0.0]
     if not len(pdf_out):
-        return spark.createDataFrame([], "query_id string, node_id string, score double")
+        return _empty_scores(spark)
     out = spark.createDataFrame(pdf_out)
+    if output_nodes is not None:
+        out = out.join(output_nodes.select("node_id"), "node_id", "left_semi")
     return out.select("query_id", "node_id", "score")
 
 

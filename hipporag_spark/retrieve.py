@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from .embed import with_embeddings
 from .knn import cosine_topk_with_stats, minmax_normalize
-from .ppr import personalized_pagerank_batch
+from .ppr import LOCAL_EDGE_LIMIT, personalized_pagerank_batch, prepare_local_graph
 
 
 @dataclass
@@ -49,7 +49,10 @@ class RetrievalConfig:
     dim: int = 128
     # physical strategy for the batched PPR ("auto" | "local" |
     # "dataframe"); gates pin "dataframe" so the oracle exercises the
-    # distributed kernel, not the small-graph driver fallback
+    # distributed kernel, not the small-graph driver fallback.  "local",
+    # and "auto" at most LOCAL_EDGE_LIMIT symmetrized edges, make the
+    # retriever collect its graph once at construction (a LocalGraph)
+    # and reuse it on every retrieve() call
     ppr_mode: str = "auto"
     # Scale escape hatch (VERDICT r2 "what's wrong" #4): the reference's
     # DPR scores EVERY passage per query (HippoRAG.py:1321-1356), i.e.
@@ -95,11 +98,8 @@ class RetrievalConfig:
 
 def pad_to_dense_topk(
     ranked: DataFrame,      # (query_id, doc_id, score, rank), rank <= k
-    queries: DataFrame,     # (query_id) — every query that must fill to k
-    positives: DataFrame,   # (query_id, doc_id) — the nonzero-score docs;
-                            # ``ranked`` itself is a valid argument, since a
-                            # query is only padded when it has < k positives,
-                            # i.e. when every positive row survived the top-k
+    queries: DataFrame,     # (query_id) — every query that must fill to k,
+                            # a superset of the queries in ``ranked``
     all_docs: DataFrame,    # (doc_id) — the full passage universe
     k: int,
 ) -> DataFrame:
@@ -111,13 +111,20 @@ def pad_to_dense_topk(
     so under-filled queries here get that tail appended: score ``0.0``,
     doc_id ascending, ranks continuing after the positive rows.
 
+    Only rows with ``score > 0`` count as positives.  Zero-score rows of
+    ``ranked`` are dropped, and the pad re-issues them in the dense
+    order.  A query is padded only when it has < k positives, i.e. when
+    every positive row survived the top-k, so ``ranked``'s positive rows
+    are its complete positive set.
+
     Scale: one global top-``2k`` sort on passage ids (an under-filled
     query has < k positive docs, so ≥ k of the 2k smallest ids score
     zero for it) broadcast-nested-looped against ONLY the under-filled
     queries — never the |V|×|Q| dense relation the sparse path exists
     to avoid."""
     k = int(k)
-    counts = ranked.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_pos"))
+    positives = ranked.where(F.col("score") > 0)
+    counts = positives.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_pos"))
     need = (
         queries.join(counts, "query_id", "left")
         .select("query_id", F.coalesce("n_pos", F.lit(0)).alias("n_pos"))
@@ -127,13 +134,13 @@ def pad_to_dense_topk(
     pad_w = Window.partitionBy("query_id").orderBy("doc_id")
     pads = (
         need.crossJoin(F.broadcast(pool))
-        .join(positives, ["query_id", "doc_id"], "left_anti")
+        .join(positives.select("query_id", "doc_id"), ["query_id", "doc_id"], "left_anti")
         .withColumn("_pr", F.row_number().over(pad_w))
         .where(F.col("_pr") + F.col("n_pos") <= k)
         .select("query_id", "doc_id", F.lit(0.0).alias("score"),
                 (F.col("_pr") + F.col("n_pos")).alias("rank"))
     )
-    return ranked.unionByName(pads)
+    return positives.unionByName(pads)
 
 
 class GraphRetriever:
@@ -191,6 +198,16 @@ class GraphRetriever:
             .agg(F.countDistinct("chunk_id").alias("chunk_degree"))
             .persist()
         )
+        # per-retriever constants, computed once rather than per call
+        self.n_passages = self.passages.count()
+        mode = self.cfg.ppr_mode
+        self.local_graph = (
+            prepare_local_graph(self.edges, None if mode == "local" else LOCAL_EDGE_LIMIT)
+            if mode in ("auto", "local") else None
+        )
+        # relations the last retrieve() persisted for its returned plan;
+        # the next call releases them, so the CacheManager does not grow
+        self._held: list[DataFrame] = []
 
     def phrase_weights(self, queries_emb: DataFrame) -> DataFrame:
         """(query_id, node_id, weight) for entity nodes — the phrase half of
@@ -250,7 +267,7 @@ class GraphRetriever:
         way — see :class:`RetrievalConfig`)."""
         m = self.cfg.dpr_reset_top_m
         if m is None:
-            k = self.passages.count()
+            k = self.n_passages
         else:
             # never truncate below the pure-DPR fallback depth, which
             # must still return retrieval_top_k rows per factless query
@@ -294,9 +311,15 @@ class GraphRetriever:
         """queries ``(query_id, question)`` → ``(query_id, doc_id, rank,
         score)`` top-``retrieval_top_k`` passages per query."""
         cfg = self.cfg
+        for df in self._held:
+            df.unpersist()
         qe = with_embeddings(queries, "question", dim=cfg.dim).persist()
-        pw = self.phrase_weights(qe)
+        # computed once: the reset vector, have_facts, the under-fill
+        # probe and the DPR-only fallback all read this one result
+        pw = self.phrase_weights(qe).localCheckpoint()
         dpr = self.dpr_scores(qe).persist()
+        qe.unpersist()  # both KNN passes over it have run
+        self._held = [dpr]
         passage_part = dpr.select(
             "query_id",
             F.col("chunk_id").alias("node_id"),
@@ -325,9 +348,10 @@ class GraphRetriever:
         # the sparse output; :func:`pad_to_dense_topk` below restores
         # the reference's dense contract (zero-score rows ordered by
         # doc_id fill top-k) at O(k) extra cost (ADVICE r4 item 1).
+        local = self.local_graph is not None and cfg.ppr_mode in ("auto", "local")
         ppr_scores = personalized_pagerank_batch(
             self.spark,
-            self.edges,
+            self.local_graph if local else self.edges,
             resets.join(have_facts, "query_id", "left_semi"),
             damping=cfg.damping,
             tol=cfg.tol,
@@ -351,13 +375,13 @@ class GraphRetriever:
             # persist the ≤ k·|Q|-row ranked relation: the under-fill
             # probe below materializes it (running the PPR job exactly
             # once), and the final plan — plus the pad plan's counts and
-            # anti-join when attached — reuses the cache; `ranked`
-            # doubles as the positive set, which is complete for exactly
-            # the queries that get padded (< k positives ⇒ nothing cut
-            # at top-k).  The probe is one scalar action over the cached
-            # relation, so the common all-queries-full case pays ~one
-            # small job instead of the pad plan's extra shuffles.
+            # anti-join when attached — reuses the cache.  Sparse output
+            # holds no zero-score rows, so every row counts as a
+            # positive here.  The probe is one scalar action over the
+            # cached relation, so the common all-queries-full case pays
+            # ~one small job instead of the pad plan's extra shuffles.
             graph_ranked = graph_ranked.persist()
+            self._held.append(graph_ranked)
             underfilled = (
                 have_facts.join(
                     graph_ranked.groupBy("query_id").agg(
@@ -370,7 +394,6 @@ class GraphRetriever:
                 graph_ranked = pad_to_dense_topk(
                     graph_ranked,
                     queries=have_facts,
-                    positives=graph_ranked.select("query_id", "doc_id"),
                     all_docs=chunk_ids.select(F.col("node_id").alias("doc_id")),
                     k=cfg.retrieval_top_k,
                 )

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -13,3 +14,35 @@ def spark():
     s = get_spark("hipporag-tests", cores=4, shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → ``(fn(), number of Spark jobs fn ran)``, read
+    from the status tracker through a job group of its own."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the tracker through the async listener bus
+        bus.waitUntilEmpty()
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    return run
+
+
+def cached_relations(spark) -> int:
+    """Entries in Spark's CacheManager (cached query plans), read by
+    reflection; the persisted-RDD count misses plans whose cache was
+    never materialized."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return int(field.get(cm).size())

@@ -139,17 +139,47 @@ def _batch_inputs(spark):
     return rows, edges, resets, rdf
 
 
-def test_batch_dataframe_matches_local_1e12(spark):
-    from hipporag_spark.ppr import personalized_pagerank_batch
+def test_batch_dataframe_matches_local_1e12(spark, count_jobs):
+    """Batch PPR on a prepared LocalGraph, the edge-DataFrame mode='local'
+    path and mode='dataframe' agree at 1e-12, including a reset node that
+    is not an edge endpoint (q2) and a query seeded only there (q4)."""
+    from pyspark.sql import functions as F
+
+    from hipporag_spark.ppr import personalized_pagerank_batch, prepare_local_graph
 
     _, edges, _, rdf = _batch_inputs(spark)
-    loc = personalized_pagerank_batch(spark, edges, rdf, damping=0.5, tol=1e-12, mode="local")
-    dist = personalized_pagerank_batch(spark, edges, rdf, damping=0.5, tol=1e-12, mode="dataframe")
-    lp = {(r["query_id"], r["node_id"]): r["score"] for r in loc.collect()}
-    dp = {(r["query_id"], r["node_id"]): r["score"] for r in dist.collect()}
-    assert set(lp) == set(dp)
-    diffs = [abs(lp[k] - dp[k]) for k in lp]
-    assert max(diffs) < 1e-12, max(diffs)
+    extra = spark.createDataFrame(
+        [("q2", "zz-isolated", 0.7), ("q4", "zz-only", 1.0)],
+        "query_id string, node_id string, reset_weight double")
+    rdf = rdf.unionByName(extra)
+    graph = prepare_local_graph(edges)
+    assert "zz-isolated" not in graph.nodes
+
+    def scores(df):
+        return {(r["query_id"], r["node_id"]): r["score"] for r in df.collect()}
+
+    prep = scores(personalized_pagerank_batch(spark, graph, rdf, damping=0.5, tol=1e-12))
+    for mode in ("local", "dataframe"):
+        other = scores(personalized_pagerank_batch(
+            spark, edges, rdf, damping=0.5, tol=1e-12, mode=mode))
+        assert set(prep) == set(other), mode
+        assert max(abs(prep[k] - other[k]) for k in prep) < 1e-12, mode
+    assert prep[("q4", "zz-only")] > 0.0
+
+    # an empty reset batch: an empty frame, and the call runs no job beyond
+    # the one collect of the reset vector (no separate emptiness pre-pass)
+    def empty():
+        return rdf.repartition(2).where(F.col("reset_weight") > 1e9)
+
+    _, collect_jobs = count_jobs(lambda: empty().toPandas())
+    assert collect_jobs > 0
+    out, jobs = count_jobs(lambda: personalized_pagerank_batch(
+        spark, graph, empty(), damping=0.5, tol=1e-12))
+    assert jobs == collect_jobs
+    assert out.collect() == []
+
+    with pytest.raises(ValueError):
+        personalized_pagerank_batch(spark, graph, rdf, mode="dataframe")
 
 
 def test_batch_matches_single_query_runs(spark):

@@ -11,6 +11,7 @@ from hipporag_spark.embed import embed_batch
 from hipporag_spark.extract import extract_all
 from hipporag_spark.graph import build_graph
 from hipporag_spark.retrieve import GraphRetriever, RetrievalConfig
+from tests.conftest import cached_relations
 from tests.reference_impl import ppr_exact
 
 DOCS = [
@@ -243,15 +244,17 @@ def test_pad_to_dense_topk_unit(spark):
         "query_id string, doc_id string, score double, rank int")
     queries = spark.createDataFrame([("qa",), ("qb",), ("qc",)],
                                     "query_id string")
-    positives = ranked.select("query_id", "doc_id")
     all_docs = spark.createDataFrame(
         [(f"d{i:02d}",) for i in range(10)], "doc_id string")
-    out = pad_to_dense_topk(ranked, queries, positives, all_docs, k=4)
-    rows = sorted(out.collect(), key=lambda x: (x["query_id"], x["rank"]))
-    by_q = {}
-    for x in rows:
-        by_q.setdefault(x["query_id"], []).append(
-            (x["rank"], x["doc_id"], x["score"]))
+
+    def padded(ranked, queries):
+        by_q = {}
+        for x in pad_to_dense_topk(ranked, queries, all_docs, k=4).collect():
+            by_q.setdefault(x["query_id"], []).append(
+                (x["rank"], x["doc_id"], x["score"]))
+        return {q: sorted(v) for q, v in by_q.items()}
+
+    by_q = padded(ranked, queries)
     # qa: 2 positives + 2 zero pads = smallest ids not in {d07, d03}
     assert by_q["qa"] == [(1, "d07", 0.9), (2, "d03", 0.5),
                           (3, "d00", 0.0), (4, "d01", 0.0)]
@@ -261,6 +264,15 @@ def test_pad_to_dense_topk_unit(spark):
     # qc: already full -> untouched
     assert by_q["qc"] == [(1, "d01", 0.8), (2, "d02", 0.7),
                           (3, "d03", 0.6), (4, "d04", 0.5)]
+
+    # an exact 0.0 row is not a positive: qd's zero-score d05 is re-issued
+    # in the dense order, zero scores by doc_id ascending (d00..d02 first)
+    zero_row = spark.createDataFrame(
+        [("qd", "d07", 0.9, 1), ("qd", "d05", 0.0, 2)],
+        "query_id string, doc_id string, score double, rank int")
+    by_q = padded(zero_row, spark.createDataFrame([("qd",)], "query_id string"))
+    assert by_q["qd"] == [(1, "d07", 0.9), (2, "d00", 0.0),
+                          (3, "d01", 0.0), (4, "d02", 0.0)]
 
 
 def test_sparse_retrieve_matches_dense_contract(spark):
@@ -304,3 +316,66 @@ def test_sparse_retrieve_matches_dense_contract(spark):
         ddoc, dscore = kd[kk]
         assert doc == ddoc, (kk, doc, ddoc)
         assert abs(score - dscore) < 1e-12
+
+
+def _rows(df):
+    return sorted((x["query_id"], x["rank"], x["doc_id"], x["score"])
+                  for x in df.collect())
+
+
+def _batch(tag, pairs):
+    return [(f"{tag}-{q}", text) for q, text in pairs]
+
+
+def test_consecutive_calls_match_fresh_retrievers(spark, built):
+    """Two consecutive retrieve() calls on one retriever, with different
+    question batches, equal the results of a fresh retriever per batch:
+    nothing one call prepares or releases leaks into the next."""
+    r, _, _ = built
+    batches = [
+        _batch("a", QUERIES),
+        _batch("b", [("q1", "vector index recall"), ("q2", "partition edge cut"),
+                     ("q3", "planner join order")]),
+    ]
+    frames = [spark.createDataFrame(b, "query_id string, question string")
+              for b in batches]
+    warm = [_rows(r.retrieve(f)) for f in frames]
+    corpus = spark.createDataFrame(
+        [(f"r{i}", f"p{i}", f"c{i}", "py", d) for i, d in enumerate(DOCS)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    t = extract_all(corpus)
+    nodes, edges = build_graph(t)
+    for f, got in zip(frames, warm):
+        fresh = GraphRetriever(spark, nodes, edges, t["chunks"], t["entities"],
+                               t["facts"], t["membership"], CFG)
+        assert got == _rows(fresh.retrieve(f))
+
+
+def test_warm_retrieve_job_budget(spark, built, count_jobs):
+    """One warm retrieve() on this fixture runs 36 Spark jobs, at local[4]
+    with 4 shuffle partitions.  The retriever prepares its PPR graph and
+    passage count once; each plan of a call runs once.  A per-call edge
+    count or collect, or a re-run of the reset-vector or phrase-weight
+    plan, adds jobs and fails this budget."""
+    r, _, _ = built
+    q = spark.createDataFrame(_batch("warmup", QUERIES), "query_id string, question string")
+    r.retrieve(q).collect()
+    q = spark.createDataFrame(_batch("budget", QUERIES), "query_id string, question string")
+    rows, jobs = count_jobs(lambda: r.retrieve(q).collect())
+    assert len(rows) == len(QUERIES) * CFG.retrieval_top_k
+    assert jobs <= 36, jobs
+
+
+def test_warm_calls_keep_cached_relations_bounded(spark, built):
+    """retrieve() releases the relations its previous call persisted: after
+    10 warm calls the CacheManager holds as many entries as after the
+    first."""
+    r, _, _ = built
+    counts = []
+    for i in range(10):
+        q = spark.createDataFrame(_batch(f"cache{i}", QUERIES),
+                                  "query_id string, question string")
+        r.retrieve(q).collect()
+        counts.append(cached_relations(spark))
+    assert counts == [counts[0]] * 10, counts
