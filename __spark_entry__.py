@@ -528,18 +528,20 @@ def q_ppr_scores(spark, sf_dir):
     """Converged PPR, oracle-checked: a DuckDB recursive-CTE power
     iteration reproduces the same fixed point.  tol=1e-12 keeps the
     convergence gap (~tol/(1-d)) three orders below the 1e-6 rounding
-    granularity, so both sides round identically.  mode='csr' pins the
-    gate to the distributed Spark kernel (broadcast rank + mapInPandas
-    bincount blocks + shuffle agg) — auto would route this sf to the
-    driver-local fast path and the oracle would verify numpy, not Spark
-    (ADVICE.md round-1)."""
+    granularity, so both sides round identically.  mode='dataframe' pins
+    the gate to the distributed Spark kernel (rank-joined edges, one
+    map-side-combined groupBy(query_id, dst).sum per superstep, blend as
+    Catalyst expressions) — auto would route this sf to the driver-local
+    fast path and the oracle would verify numpy, not Spark (ADVICE.md
+    round-1)."""
     edges = _phrase_edges(_tokens(spark, sf_dir))
     seeds = (
         edges.select(F.col("src").alias("node_id")).distinct()
         .where(F.col("node_id").isin(SEED_PHRASES))
         .withColumn("reset_weight", F.lit(1.0))
     )
-    res = personalized_pagerank(spark, edges, seeds, damping=0.85, tol=1e-12, mode="csr")
+    res = personalized_pagerank(spark, edges, seeds, damping=0.85, tol=1e-12,
+                                mode="dataframe")
     # all nodes, no top-k cut: a limit boundary would fall inside a plateau
     # of near-equal chunk scores where engine-level 1e-12 noise flips
     # membership; the full vector compares robustly after round-6
@@ -549,11 +551,11 @@ def q_ppr_scores(spark, sf_dir):
 def q_pagerank(spark, sf_dir):
     """Global PageRank (uniform teleport — the north_rule's first named
     algorithm) at the same tol/rounding discipline as q_ppr_scores;
-    distributed csr kernel pinned."""
+    distributed dataframe kernel pinned."""
     from hipporag_spark.ppr import pagerank
 
     edges = _phrase_edges(_tokens(spark, sf_dir))
-    res = pagerank(spark, edges, damping=0.85, tol=1e-12, mode="csr")
+    res = pagerank(spark, edges, damping=0.85, tol=1e-12, mode="dataframe")
     return res.ranks.select("node_id", F.round("score", 6).alias("score"))
 
 
@@ -611,7 +613,7 @@ def q_retrieve(spark, sf_dir):
         spark, nodes, edges, tables["chunks"], tables["entities"],
         tables["facts"], tables["membership"],
         # ppr_mode='dataframe' pins the distributed batch-PPR kernel (the
-        # (query_id, node_id)-keyed salted aggregation), not the
+        # (query_id, node_id)-keyed aggregation), not the
         # small-graph driver fallback
         config=RetrievalConfig(retrieval_top_k=10, ppr_mode="dataframe"),
     )

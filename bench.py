@@ -60,6 +60,8 @@ from hipporag_spark.corpus import corpus_from_documents  # noqa: E402
 from hipporag_spark.extract import extract_all  # noqa: E402
 from hipporag_spark.graph import build_graph  # noqa: E402
 from hipporag_spark.ppr import (  # noqa: E402
+    _contributions,
+    _normalized_edges,
     personalized_pagerank,
     ppr_from_blocks_batched,
     prepare_csr_blocks,
@@ -362,28 +364,22 @@ def dump_plan_artifacts(spark) -> None:
             df.explain("formatted")
         return buf.getvalue()
 
-    # dataframe-mode PPR superstep: rank side broadcast, salted 2-stage agg
+    # dataframe-mode PPR superstep: rank side broadcast, one map-side-
+    # combined aggregate (partial_sum, then the single exchange)
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{(i * 7 + 1) % 50}", 1.0) for i in range(200)],
         "src string, dst string, weight double")
-    outw = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    norm = (
-        edges.join(outw.where(F.col("out_w") > 0), "src")
-        .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("wn"),
-                F.pmod(F.xxhash64("src"), F.lit(16)).alias("salt"))
-        .repartition(F.col("src")).persist())
+    norm = _normalized_edges(edges).repartition(F.col("src")).persist()
     norm.count()
     ranks = spark.createDataFrame(
-        [(f"n{i}", 1.0 / 50) for i in range(50)], "src string, rank double")
-    contrib = (
-        norm.join(ranks, "src")
-        .select("dst", "salt", (F.col("rank") * F.col("wn")).alias("c"))
-        .groupBy("dst", "salt").agg(F.sum("c").alias("c"))
-        .groupBy("dst").agg(F.sum("c").alias("c")))
-    p1 = plan_of(contrib)
+        [("q", f"n{i}", 1.0 / 50) for i in range(50)],
+        "query_id string, node_id string, rank double").persist()
+    ranks.count()
+    p1 = plan_of(_contributions(norm, ranks))
     norm.unpersist()
-    assert "BroadcastHashJoin" in p1 and p1.count("HashAggregate") >= 4, \
-        "PPR superstep plan regressed (broadcast/salted-agg markers missing)"
+    ranks.unpersist()
+    assert "BroadcastHashJoin" in p1 and "partial_sum" in p1, \
+        "PPR superstep plan regressed (broadcast/map-side-agg markers missing)"
     with open(os.path.join(BENCH_DIR, "plan_ppr_superstep.txt"), "w") as f:
         f.write(p1)
 

@@ -8,11 +8,14 @@ is implemented as a parquet directory per superstep plus an atomically
 renamed ``manifest.json``:
 
     <dir>/step=<k>/ranks.parquet        per-partition rank state
-    <dir>/step=<k>/manifest.json        {step, metrics, partitions, parent}
+    <dir>/step=<k>/manifest.json        {step, metrics, partitions, parent,
+                                         state_format}
     <dir>/LATEST                        pointer file (atomic rename)
 
 ``parent`` in each manifest chains to the previous step → full lineage of
-the iteration.  Writers write to a temp name then ``os.replace`` so a
+the iteration.  ``state_format`` tags the layout of the state table, so a
+reader checks it (:meth:`CheckpointStore.read_latest`) before it reads a
+column.  Writers write to a temp name then ``os.replace`` so a
 kill mid-write never corrupts the latest valid checkpoint.
 """
 
@@ -44,7 +47,8 @@ class CheckpointStore:
             return step
         return None
 
-    def write(self, step: int, ranks: DataFrame, metrics: dict, partitions: list[dict] | None = None) -> None:
+    def write(self, step: int, ranks: DataFrame, metrics: dict,
+              partitions: list[dict] | None = None, state_format: str | None = None) -> None:
         d = self._step_dir(step)
         # parent = the previous checkpoint actually on disk (batched runs
         # checkpoint at batch boundaries, not every superstep).  When
@@ -65,6 +69,7 @@ class CheckpointStore:
             "metrics": metrics,
             "partitions": partitions or [],
             "parent": parent,
+            "state_format": state_format,
         }
         tmp = os.path.join(d, "manifest.json.tmp")
         with open(tmp, "w") as f:
@@ -80,6 +85,24 @@ class CheckpointStore:
         with open(os.path.join(d, "manifest.json")) as f:
             manifest = json.load(f)
         return spark.read.parquet(os.path.join(d, "ranks.parquet")), manifest
+
+    def read_latest(self, spark: SparkSession,
+                    state_format: str) -> tuple[int, DataFrame, dict] | None:
+        """``(step, state, manifest)`` of the latest durable step, or
+        ``None`` when there is none.  Raises ``ValueError`` when that
+        step's manifest is not tagged ``state_format`` (an untagged one
+        included), so an incompatible checkpoint fails instead of being
+        read as this format."""
+        step = self.latest_step()
+        if step is None:
+            return None
+        state, manifest = self.read(spark, step)
+        found = manifest.get("state_format")
+        if found != state_format:
+            raise ValueError(
+                f"checkpoint {self.root} step {step} has state format {found!r}; "
+                f"this run reads {state_format!r}")
+        return step, state, manifest
 
     def lineage(self) -> list[dict]:
         """All manifests, oldest→newest — the iteration's lineage chain."""

@@ -184,7 +184,7 @@ def label_propagation(
 def _lpa_local(spark, sym, max_iter) -> LPAResult:
     """Driver-local fast path — identical semantics, one collect (small
     graphs; per-superstep Spark job overhead dominates below
-    ``local_edge_limit``, same rationale as ppr._run_local)."""
+    ``local_edge_limit``, same rationale as PPR's ``mode='local'``)."""
     import hashlib
 
     import pandas as pd

@@ -25,8 +25,8 @@ def get_spark(
     Arrow is enabled because every numeric kernel (PPR supersteps, KNN
     block matmul, MinHash) crosses the Python boundary via pandas/Arrow
     UDFs, never per-row Python.  AQE is enabled so skewed shuffles
-    (hub-identifier fact edges) are split at runtime in addition to the
-    explicit salting done in :mod:`hipporag_spark.ppr`.
+    (hub-identifier fact edges) are split at runtime; PPR's hub sums need
+    no more than Spark's map-side combine.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = shuffle_partitions or int(

@@ -37,7 +37,7 @@ def main():
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--mode", default="auto",
-                    choices=["auto", "local", "csr", "dataframe"])
+                    choices=["auto", "local", "dataframe", "blocks"])
     args = ap.parse_args()
 
     spark = get_spark("hipporag-ppr")

@@ -38,6 +38,23 @@ def count_jobs(spark):
     return run
 
 
+@pytest.fixture
+def checkpoint_writes(monkeypatch):
+    """``(store root, step)`` of every ``CheckpointStore.write`` the test
+    process makes while the test runs, in order."""
+    from hipporag_spark.checkpoint import CheckpointStore
+
+    writes = []
+    write = CheckpointStore.write
+
+    def spy(self, step, *args, **kwargs):
+        writes.append((self.root, step))
+        return write(self, step, *args, **kwargs)
+
+    monkeypatch.setattr(CheckpointStore, "write", spy)
+    return writes
+
+
 def cached_relations(spark) -> int:
     """Entries in Spark's CacheManager (cached query plans), read by
     reflection; the persisted-RDD count misses plans whose cache was

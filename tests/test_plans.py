@@ -2,13 +2,14 @@
 engine's 100 TB story depends on (SURVEY §4, BENCH/BASELINE.md "Plan
 quality").  These assert on `explain("formatted")` output, so a future
 refactor that silently reintroduces a full-column scan, drops a
-broadcast, or collapses the salted two-stage aggregation fails loudly.
+broadcast, or loses the PPR superstep's map-side combine fails loudly.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -68,53 +69,57 @@ def test_ann_scan_prunes_label_column(spark, emb):
             assert "label" not in ln, ln
 
 
-def test_dataframe_ppr_superstep_broadcasts_rank_side(spark):
-    """The dataframe-mode contribution join must broadcast the (small)
-    rank side against the persisted edge relation — edges are never
-    re-shuffled per superstep."""
+def _ppr_superstep_plan(spark) -> str:
+    """The plan of one dataframe-mode PPR superstep
+    (``ppr._contributions``) over persisted normalized edges and a
+    persisted rank table, as ``_batch_dataframe`` runs it."""
+    from hipporag_spark.ppr import _contributions, _normalized_edges
+
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{(i * 7 + 1) % 50}", 1.0) for i in range(200)],
         "src string, dst string, weight double",
     )
-    outw = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    norm = (
-        edges.join(outw.where(F.col("out_w") > 0), "src")
-        .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("wn"),
-                F.pmod(F.xxhash64("src"), F.lit(16)).alias("salt"))
-        .repartition(F.col("src"))
-        .persist()
-    )
+    norm = _normalized_edges(edges).repartition(F.col("src")).persist()
     norm.count()
     ranks = spark.createDataFrame(
-        [(f"n{i}", 1.0 / 50) for i in range(50)], "src string, rank double")
-    contrib = (
-        norm.join(ranks, "src")
-        .select("dst", "salt", (F.col("rank") * F.col("wn")).alias("c"))
-        .groupBy("dst", "salt").agg(F.sum("c").alias("c"))
-        .groupBy("dst").agg(F.sum("c").alias("c"))
-    )
-    plan = _plan(contrib)
+        [("q", f"n{i}", 1.0 / 50) for i in range(50)],
+        "query_id string, node_id string, rank double").persist()
+    ranks.count()
+    try:
+        return _plan(_contributions(norm, ranks))
+    finally:
+        norm.unpersist()
+        ranks.unpersist()
+
+
+def test_dataframe_ppr_superstep_broadcasts_rank_side(spark):
+    """The dataframe-mode contribution join must broadcast the (small)
+    rank side against the persisted edge relation — edges are never
+    re-shuffled per superstep."""
+    plan = _ppr_superstep_plan(spark)
     assert "BroadcastHashJoin" in plan, plan
-    # two-stage salted agg: partial+final on (dst, salt), then partial+
-    # final on dst — four HashAggregates, two exchanges
-    assert plan.count("HashAggregate") >= 4, plan.count("HashAggregate")
-    norm.unpersist()
+    broadcast_inputs = re.findall(
+        r"\(\d+\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
+    assert any("rank#" in cols for cols in broadcast_inputs), broadcast_inputs
 
 
-def test_salted_agg_has_mapside_combine(spark):
-    """Both aggregation stages must show partial_sum before the exchange
-    (map-side combine: hub keys pre-reduced inside each partition)."""
-    edges = spark.createDataFrame(
-        [("hub", f"n{i}", 1.0) for i in range(100)],
-        "src string, dst string, weight double",
-    )
-    salted = (
-        edges.withColumn("salt", F.pmod(F.xxhash64("dst"), F.lit(8)))
-        .groupBy("src", "salt").agg(F.sum("weight").alias("w"))
-        .groupBy("src").agg(F.sum("w").alias("w"))
-    )
-    plan = _plan(salted)
-    assert "partial_sum" in plan, plan
+def test_ppr_superstep_agg_has_mapside_combine(spark):
+    """The superstep's ``groupBy(query_id, dst).sum`` is combined map-side:
+    a ``partial_sum`` aggregate feeds the ONE exchange on (query_id, dst),
+    so a hub destination reaches its reducer as at most one row per map
+    partition, with no second aggregation stage."""
+    plan = _ppr_superstep_plan(spark)
+    exchanges = re.findall(
+        r"\((\d+)\) Exchange\nInput [^\n]*\nArguments: hashpartitioning"
+        r"\(query_id#\d+, dst#\d+", plan)
+    partials = re.findall(
+        r"\((\d+)\) HashAggregate\nInput [^\n]*\nKeys \[2\]: "
+        r"\[query_id#\d+, dst#\d+\]\nFunctions \[1\]: \[partial_sum", plan)
+    assert len(exchanges) == 1, plan
+    assert len(partials) == 1, plan
+    # formatted-plan node ids grow from the leaves: the partial aggregate
+    # runs before the exchange
+    assert int(partials[0]) < int(exchanges[0])
 
 
 def test_persisted_ivf_probe_prunes_partitions(spark, emb, tmp_path):

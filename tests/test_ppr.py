@@ -3,10 +3,10 @@ dense-solve oracle, on graphs covering parallel edges, dangling vertices,
 disconnected components, NaN/negative reset weights, zero-weight rows and
 hub skew — allclose(atol=1e-6), the north_rule criterion.
 
-The local mode (identical math, driver numpy) runs the full matrix; the
-distributed csr/dataframe paths run a reduced matrix (Spark job-launch
-overhead per superstep) plus a cross-mode equivalence test on a larger
-seeded graph."""
+The local mode (identical math, driver numpy) runs the full matrix at two
+dampings; the distributed blocks/dataframe paths run one damping
+(Spark job-launch overhead per superstep) plus a cross-mode equivalence
+test on a larger seeded graph."""
 
 import numpy as np
 import pytest
@@ -45,8 +45,12 @@ GRAPHS = [
 ]
 _IDS = [g[0] for g in GRAPHS]
 
+# Spark jobs of one three-superstep dataframe-mode batch on _batch_inputs
+# (local[4], AQE on)
+DATAFRAME_BATCH_JOBS_3_STEPS = 63
 
-def _run(spark, rows, reset, damping, mode, tol=1e-10):
+
+def _result(spark, rows, reset, damping, mode, tol=1e-10):
     edges = spark.createDataFrame(
         [(u, v, float(w), "fact") for u, v, w in rows],
         "src string, dst string, weight double, relation string",
@@ -58,6 +62,11 @@ def _run(spark, rows, reset, damping, mode, tol=1e-10):
         spark, edges, rdf, damping=damping, tol=tol, mode=mode, n_blocks=4
     )
     assert res.converged
+    return res
+
+
+def _run(spark, rows, reset, damping, mode, tol=1e-10):
+    res = _result(spark, rows, reset, damping, mode, tol)
     return {r["node_id"]: r["score"] for r in res.ranks.collect()}
 
 
@@ -79,7 +88,9 @@ def test_local_mode_matches_exact_solve(spark, name, rows, reset, damping):
 
 @pytest.mark.parametrize("name,rows,reset", GRAPHS, ids=_IDS)
 def test_csr_mode_matches_exact_solve(spark, name, rows, reset):
-    got = _run(spark, rows, reset, 0.5, "csr")
+    """mode='blocks' — the CSR-block kernel, which replaced mode='csr' —
+    on every graph, NaN resets, zero-weight rows and hubs included."""
+    got = _run(spark, rows, reset, 0.5, "blocks")
     _check(got, rows, reset, 0.5)
 
 
@@ -100,22 +111,41 @@ def _random_graph(n_nodes=120, n_edges=600, seed=7):
     return rows, reset
 
 
-@pytest.mark.parametrize("mode", ["local", "csr", "dataframe"])
+@pytest.mark.parametrize("mode", ["local", "dataframe", "blocks"])
 def test_modes_agree_on_random_graph(spark, mode):
     rows, reset = _random_graph()
     got = _run(spark, rows, reset, 0.85, mode, tol=1e-9)
     _check(got, rows, reset, 0.85)
 
 
+def test_single_query_modes_report_same_supersteps(spark):
+    """A single query is a batch of one in every mode: local and
+    dataframe run the same number of supersteps and report one metrics
+    dict per superstep."""
+    rows, reset = _random_graph()
+    local = _result(spark, rows, reset, 0.85, "local", tol=1e-9)
+    frame = _result(spark, rows, reset, 0.85, "dataframe", tol=1e-9)
+    assert local.iterations == frame.iterations
+    for res in (local, frame):
+        assert len(res.metrics) == res.iterations
+        assert [m["superstep"] for m in res.metrics] == list(range(res.iterations))
+        assert res.metrics[-1]["l1_delta"] < 1e-9
+
+
 def test_reset_all_zero_raises(spark):
+    """A single query whose reset is empty, or sums to 0 after clamping,
+    raises in every mode."""
     edges = spark.createDataFrame(
         [("a", "b", 1.0, "fact")], "src string, dst string, weight double, relation string"
     )
     rdf = spark.createDataFrame(
         [("a", float("nan"))], "node_id string, reset_weight double"
     )
-    with pytest.raises(Exception):
-        personalized_pagerank(spark, edges, rdf, mode="local")
+    for mode in ("local", "dataframe", "blocks"):
+        with pytest.raises(ValueError):
+            personalized_pagerank(spark, edges, rdf, mode=mode)
+        with pytest.raises(ValueError):
+            personalized_pagerank(spark, edges, rdf.limit(0), mode=mode)
 
 
 # -------------------------------------------------------------------------
@@ -256,3 +286,65 @@ def test_batch_sparse_output_matches_dense_on_filter(spark):
         assert set(sp) == set(dp), (mode, len(sp), len(dp))
         assert all(abs(sp[k] - dp[k]) < 1e-15 for k in sp), mode
         assert sp, "filter unexpectedly empty"
+
+
+def test_dataframe_batch_job_budget(spark, count_jobs):
+    """Spark jobs of one mode='dataframe' batch run of three supersteps: an
+    extra per-superstep action (e.g. a count for metrics) fails this pin.
+    The returned dense frame is lazy, so no output job is counted."""
+    from hipporag_spark.ppr import personalized_pagerank_batch
+
+    _, edges, _, rdf = _batch_inputs(spark)
+    _, jobs = count_jobs(lambda: personalized_pagerank_batch(
+        spark, edges, rdf, damping=0.85, tol=0.0, max_iter=3, mode="dataframe"))
+    assert jobs <= DATAFRAME_BATCH_JOBS_3_STEPS, jobs
+
+
+def test_resume_rejects_checkpoint_of_another_format(spark, tmp_path):
+    """A resume reads a checkpoint only when its manifest carries the
+    loop's state-format tag: an untagged single-query ``(idx, rank)``
+    checkpoint, and a rank-matrix checkpoint offered to the dataframe
+    loop, both raise naming the two tags instead of being misread."""
+    from hipporag_spark.checkpoint import CheckpointStore
+    from hipporag_spark.ppr import personalized_pagerank_batch
+
+    _, edges, _, rdf = _batch_inputs(spark)
+    old = str(tmp_path / "old_single_query")
+    CheckpointStore(old).write(
+        3, spark.createDataFrame([(0, 1.0)], "idx long, rank double"),
+        {"superstep": 3, "l1_delta": 0.5, "mode": "local"})
+    single = spark.createDataFrame([("n000", 1.0)], "node_id string, reset_weight double")
+    with pytest.raises(ValueError, match=r"None.*ppr-rank-matrix"):
+        personalized_pagerank(spark, edges, single, mode="local",
+                              checkpoint_dir=old, resume=True)
+
+    matrix = str(tmp_path / "matrix")
+    personalized_pagerank_batch(spark, edges, rdf, mode="local", max_iter=2,
+                                checkpoint_dir=matrix, checkpoint_every=1)
+    with pytest.raises(ValueError, match=r"ppr-rank-matrix.*ppr-rank-table"):
+        personalized_pagerank_batch(spark, edges, rdf, mode="dataframe",
+                                    checkpoint_dir=matrix, resume=True)
+
+
+def test_local_checkpoint_resume(spark, tmp_path):
+    """The driver loop resumes a truncated local-mode batch from its last
+    checkpoint to the uninterrupted scores, and a resume of a converged
+    run runs no superstep."""
+    from hipporag_spark.checkpoint import CheckpointStore
+    from hipporag_spark.ppr import _run as run_engine
+
+    _, edges, _, rdf = _batch_inputs(spark)
+    ckpt = str(tmp_path / "local_ckpt")
+    kw = dict(damping=0.5, tol=1e-12, mode="local")
+    full = run_engine(spark, edges, rdf, max_iter=500, **kw)
+    run_engine(spark, edges, rdf, max_iter=7, checkpoint_dir=ckpt, checkpoint_every=3, **kw)
+    assert CheckpointStore(ckpt).latest_step() == 6
+    resumed = run_engine(spark, edges, rdf, max_iter=500, checkpoint_dir=ckpt, resume=True, **kw)
+    assert resumed.metrics[0]["superstep"] == 7
+    assert resumed.converged and resumed.iterations == full.iterations
+    want = {(r["query_id"], r["node_id"]): r["score"] for r in full.ranks.collect()}
+    got = {(r["query_id"], r["node_id"]): r["score"] for r in resumed.ranks.collect()}
+    assert got == want  # bitwise: the same float ops from the same state
+
+    again = run_engine(spark, edges, rdf, max_iter=500, checkpoint_dir=ckpt, resume=True, **kw)
+    assert again.metrics == [] and again.converged

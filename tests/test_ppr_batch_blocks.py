@@ -4,6 +4,8 @@ at 1e-12 on dense AND sparse output, including reset-only nodes that
 are not edge endpoints (isolated dangling vertices), and `mode='auto'`
 must route to it above `blocks_edge_limit` symmetrized edges."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -95,3 +97,22 @@ def test_blocks_rejects_zero_reset_query(spark, frames, tmp_path):
         personalized_pagerank_batch(
             spark, edges, resets, mode="blocks", n_blocks=4,
             blocks_dir=str(tmp_path / "b4"))
+
+
+def test_blocks_resume_skips_converged_chunks(spark, frames, tmp_path, checkpoint_writes):
+    """Blocks-mode batch checkpoints each query chunk in the caller's node
+    numbering: a resume on a rebuilt layout (``blocks_dir=None``) reads
+    every chunk back, runs no superstep for a chunk that had converged,
+    and returns the same scores."""
+    edges, resets = frames
+    ckpt = str(tmp_path / "ckpt")
+    kw = dict(damping=0.5, tol=1e-13, mode="blocks", n_blocks=4, query_chunk=2,
+              checkpoint_dir=ckpt)
+    first = _scores(personalized_pagerank_batch(spark, edges, resets, **kw))
+    assert sorted(os.listdir(ckpt)) == ["chunk=0", "chunk=1"]
+    assert checkpoint_writes
+
+    checkpoint_writes.clear()
+    again = _scores(personalized_pagerank_batch(spark, edges, resets, resume=True, **kw))
+    assert checkpoint_writes == []
+    assert again == first

@@ -285,3 +285,22 @@ def test_blocks_distributed_assignment_is_balanced(spark, tmp_path):
     counts = np.array([per_block.get(b, 0) for b in range(8)])
     mean = counts.mean()
     assert counts.max() <= 1.25 * mean, (counts.tolist(), mean)
+
+
+def test_unknown_block_layout_raises(spark, tmp_path):
+    """A layout prepare_csr_blocks does not write (here the retired
+    'balanced' one) is rejected instead of being read as another."""
+    import json
+
+    from hipporag_spark.ppr import _load_blocks_ctx
+
+    out = str(tmp_path / "blocks_layout")
+    prepare_csr_blocks(spark, _random_edges(spark, seed=6, n_edges=200), out,
+                       n_blocks=2, int_ids=N, unit_weights=True)
+    with open(f"{out}/meta.json") as f:
+        meta = json.load(f)
+    meta["layout"] = "balanced"
+    with open(f"{out}/meta.json", "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="balanced"):
+        _load_blocks_ctx(spark, out)
