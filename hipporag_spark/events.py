@@ -114,10 +114,25 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
 
 SESSION_OUT_SCHEMA = ("user_id long, session_start timestamp, "
                       "session_end timestamp, n_events long, total_value double")
-# parallel arrays: one entry per held (watermark-unsealed) interval,
-# sorted by start_us ascending
-_STATE_SCHEMA = ("starts_us array<long>, lasts_us array<long>, "
+# the state format tag every state row carries; bump it whenever the
+# meaning of the fields below changes
+_STATE_FORMAT = "sessionize-intervals/2"
+# the format tag, then parallel arrays: one entry per held
+# (watermark-unsealed) interval, sorted by start_us ascending
+_STATE_SCHEMA = ("state_format string, starts_us array<long>, lasts_us array<long>, "
                  "ns array<long>, total_cents array<long>")
+
+
+def _held_intervals(state, state_format: str) -> list[list[int]]:
+    """The intervals in ``state``, after checking that its format tag is
+    ``state_format``."""
+    found, starts, lasts, ns, cents = state.get
+    if found != state_format:
+        raise ValueError(
+            f"sessionize_stream state has format {found!r}, this code reads "
+            f"{state_format!r}; restart the query from a fresh checkpoint location")
+    return [[int(s), int(e), int(n_), int(c_)]
+            for s, e, n_, c_ in zip(starts, lasts, ns, cents)]
 
 
 def sessionize_stream(events: DataFrame, gap_minutes: int = 30,
@@ -146,8 +161,18 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30,
     ``session_seq`` is deliberately absent from the streaming output: a
     stream cannot know a user's historical session count without
     unbounded state; join on ``(user_id, session_start)`` instead.
+
+    Checkpoint compatibility: every state row carries the state format
+    tag ``_STATE_FORMAT``.  A restart that finds state of another format
+    fails with a ``ValueError`` naming both formats; restart such a query
+    from a fresh checkpoint location.  Checkpoints written before the tag
+    existed hold a state schema without it, which Spark's state schema
+    check rejects at restart.
     """
     gap_us = int(gap_minutes) * 60 * 1_000_000
+    # read once here, so the workers write and expect the tag of the
+    # code that defined the query
+    state_format = _STATE_FORMAT
 
     def _emit(user_id, sealed):
         return pd.DataFrame(
@@ -166,6 +191,7 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30,
         held = [iv for iv in merged if iv[1] + gap_us >= wm_us]
         if held:
             state.update((
+                state_format,
                 [int(iv[0]) for iv in held],
                 [int(iv[1]) for iv in held],
                 [int(iv[2]) for iv in held],
@@ -185,10 +211,7 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30,
     def fn(key, pdfs: Iterator[pd.DataFrame], state):
         (user_id,) = key
         if state.hasTimedOut:
-            starts, lasts, ns, cents_a = state.get
-            merged = [[int(s), int(e), int(n_), int(c_)]
-                      for s, e, n_, c_ in zip(starts, lasts, ns, cents_a)]
-            yield from _seal_and_update(user_id, merged, state)
+            yield from _seal_and_update(user_id, _held_intervals(state, state_format), state)
             return
         rows = pd.concat(list(pdfs), ignore_index=True)
         rows = rows.sort_values(["ts", "event_id"])
@@ -204,11 +227,8 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30,
         # its start backwards or its end forwards), an event bridging
         # two held intervals fuses them, and anything farther than a
         # gap from everything opens its own interval.
-        items = []
-        if state.exists:
-            starts, lasts, ns, cents_a = state.get
-            items += [(int(s), int(e), int(n_), int(c_))
-                      for s, e, n_, c_ in zip(starts, lasts, ns, cents_a)]
+        items = ([tuple(iv) for iv in _held_intervals(state, state_format)]
+                 if state.exists else [])
         items += [(int(ts_us[i]), int(ts_us[i]), 1, int(cents[i]))
                   for i in range(len(rows))]
         items.sort(key=lambda x: (x[0], x[1]))

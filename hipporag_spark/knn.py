@@ -10,12 +10,18 @@ top-k per block, final top-k over the concatenation).  Spark-first shape
   keys to blocks, and every (tile × block) cell is one cogrouped
   ``applyInPandas`` task computing ``K_block @ Q_tileᵀ`` in numpy and
   emitting only its local top-k rows per query (map-side pruning: a
-  block of B keys emits ≤ k rows per query, never B).  The driver never
-  materializes either matrix — the round-1 ``toPandas()`` query tiling
-  was the repo's KNN scale-killer (VERDICT.md "What's wrong" #1);
+  block of B keys emits k rows per query, plus any ties at the k-th
+  score, never B).  These functions never materialize either matrix on
+  the driver — the round-1 ``toPandas()`` query tiling was the repo's
+  KNN scale-killer (VERDICT.md "What's wrong" #1).  The cell itself is
+  :func:`topk_cell`; the retriever's local plan (:mod:`.retrieve`) runs
+  that same kernel over a driver-local store small enough to collect
+  (``LOCAL_INDEX_LIMIT`` rows), as one cell;
 - per-pair scores are independent of the blocking (one float64 dot
-  product per (query, key) regardless of which cell computes it), so
-  results are bit-identical across tile/block counts;
+  product per (query, key) regardless of which cell computes it) up to
+  the BLAS kernel's summation order, which can move the last bit
+  (~1e-16) with the shape of the matmul — e.g. between a blocked cell
+  and the local plan's single cell;
 - final top-k via ``row_number`` window per query, ties pinned by
   ``key_id`` ascending for determinism (torch.topk tie order in the
   reference is unpinned; SURVEY.md §4.3.7).
@@ -48,6 +54,22 @@ def _normalized(mat: np.ndarray) -> np.ndarray:
     nrm = np.linalg.norm(mat, axis=1, keepdims=True)
     nrm[nrm == 0] = 1.0
     return mat / nrm
+
+
+def topk_cell(q_mat: np.ndarray, k_mat: np.ndarray, k: int):
+    """One (query tile × key block) cell of the exact top-k: cosine scores
+    of L2-normalized float64 rows, ``K @ Qᵀ``.  Returns ``(q_pos, k_pos,
+    score, smin, smax)``: every (query, key) pair scoring at least the
+    query's ``k``-th best in this block — ties at that score included, so
+    a (score desc, key id asc) ranking over the cells' union is exact —
+    and each query's min and max over ALL the block's keys.  Both plans
+    of the retriever run this one kernel: the distributed one per
+    cogrouped cell, the local one over the whole store."""
+    sims = k_mat @ q_mat.T  # (block_keys, tile_queries)
+    kb = min(k, sims.shape[0])
+    kth = np.partition(sims, sims.shape[0] - kb, axis=0)[sims.shape[0] - kb]
+    k_pos, q_pos = np.nonzero(sims >= kth)
+    return q_pos, k_pos, sims[k_pos, q_pos], sims.min(axis=0), sims.max(axis=0)
 
 
 def _blocked_scores(
@@ -90,15 +112,15 @@ def _blocked_scores(
             return empty
         q_ids = qpdf["query_id"].to_numpy()
         k_ids = kpdf["key_id"].to_numpy()
-        q_mat = _normalized(np.stack(qpdf["qvec"].to_numpy()).astype(np.float64))
-        k_mat = _normalized(np.stack(kpdf["kvec"].to_numpy()).astype(np.float64))
-        sims = k_mat @ q_mat.T  # (block_keys, tile_queries)
-        kb = min(k, sims.shape[0])
-        part = np.argpartition(-sims, kb - 1, axis=0)[:kb]
+        q_pos, k_pos, score, smin, smax = topk_cell(
+            _normalized(np.stack(qpdf["qvec"].to_numpy()).astype(np.float64)),
+            _normalized(np.stack(kpdf["kvec"].to_numpy()).astype(np.float64)),
+            k,
+        )
         out = pd.DataFrame({
-            "query_id": np.repeat(q_ids[None, :], kb, axis=0).ravel(),
-            "key_id": k_ids[part].ravel(),
-            "score": np.take_along_axis(sims, part, axis=0).ravel(),
+            "query_id": q_ids[q_pos],
+            "key_id": k_ids[k_pos],
+            "score": score,
             "is_stat": False,
             "smin": 0.0,
             "smax": 0.0,
@@ -109,8 +131,8 @@ def _blocked_scores(
                 "key_id": "",
                 "score": 0.0,
                 "is_stat": True,
-                "smin": sims.min(axis=0),
-                "smax": sims.max(axis=0),
+                "smin": smin,
+                "smax": smax,
             })
             out = pd.concat([out, stats], ignore_index=True)
         return out

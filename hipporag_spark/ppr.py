@@ -31,10 +31,12 @@ mode picks the loop (``mode='auto'``: ``local`` up to
     per-superstep metrics and checkpoint/resume.  A contribution kernel
     is its only input that differs between callers:
 
-    - ``mode='local'`` (:func:`_batch_local`): ``np.bincount`` over a
-      :class:`LocalGraph`, which :func:`prepare_local_graph` collects once
-      so repeated calls over one graph — the retriever's — re-collect only
-      their reset vector;
+    - ``mode='local'`` (:func:`local_rank_matrix`, wrapped for DataFrames
+      by :func:`_batch_local`): ``np.bincount`` over a :class:`LocalGraph`,
+      which :func:`prepare_local_graph` collects once so repeated calls
+      over one graph — the retriever's — re-collect only their reset
+      vector, or nothing when the retriever's local plan hands the core
+      its reset rows directly;
     - ``mode='blocks'`` (:func:`_batch_blocks`) and :func:`ppr_from_blocks`:
       the CSR-block kernel over a :func:`prepare_csr_blocks` layout, one
       Spark job per superstep whose tasks scatter-add their dst-blocks.
@@ -419,13 +421,16 @@ def _empty_scores(spark) -> DataFrame:
     return spark.createDataFrame([], "query_id string, node_id string, score double")
 
 
-def _batch_local(spark, graph: LocalGraph, resets_c, damping, tol, max_iter,
-                 output_nodes, store, checkpoint_every, resume) -> PPRResult | None:
-    """:func:`_drive` with the ``np.bincount`` kernel over a prepared
-    :class:`LocalGraph`.  The reset vector is collected once; reset nodes
-    that are not edge endpoints join the universe as isolated (dangling)
-    nodes after the prepared ones.  Query order = sorted query_id."""
-    rpdf = resets_c.toPandas()
+def local_rank_matrix(spark, graph: LocalGraph, rpdf: pd.DataFrame, damping, tol,
+                      max_iter=500, store=None, checkpoint_every=1, resume=False):
+    """The numpy core of ``mode='local'``: :func:`_drive` with the
+    ``np.bincount`` kernel over a prepared :class:`LocalGraph`, from the
+    collected reset rows ``rpdf`` ``(query_id, node_id, reset_weight)``,
+    already clamped.  Reset nodes that are not edge endpoints join the
+    universe as isolated (dangling) nodes after the prepared ones.
+    Returns ``(qids, node_ids, ranks, iterations, converged, metrics)``
+    with ``ranks`` a ``(len(qids) × len(node_ids))`` matrix and query
+    order = sorted query_id; ``None`` when ``rpdf`` has no rows."""
     if not len(rpdf):  # no queries (e.g. rerank dropped every fact)
         return None
     ridx = graph.nodes.get_indexer(rpdf["node_id"])
@@ -437,9 +442,8 @@ def _batch_local(spark, graph: LocalGraph, resets_c, damping, tol, max_iter,
     dangling = np.concatenate([graph.dangling, np.ones(len(extra), dtype=bool)])
     n = len(node_ids)
     qpos, qids = pd.factorize(rpdf["query_id"], sort=True)
-    nq = len(qids)
 
-    R = np.zeros((nq, n), dtype=np.float64)
+    R = np.zeros((len(qids), n), dtype=np.float64)
     R[qpos, ridx] = rpdf["reset_weight"].to_numpy(dtype=np.float64)
     rowsum = R.sum(axis=1)
     if (rowsum <= 0).any():
@@ -457,10 +461,21 @@ def _batch_local(spark, graph: LocalGraph, resets_c, damping, tol, max_iter,
         spark, kernel, R, dangling, damping, tol, max_iter, qids=list(qids),
         n_edges=len(src), mode="local", store=store,
         checkpoint_every=checkpoint_every, resume=resume)
+    return qids.to_numpy(dtype=object), node_ids, ranks, iterations, converged, metrics
 
+
+def _batch_local(spark, graph: LocalGraph, resets_c, damping, tol, max_iter,
+                 output_nodes, store, checkpoint_every, resume) -> PPRResult | None:
+    """:func:`local_rank_matrix` over the reset vector, collected once,
+    returned as a ``(query_id, node_id, score)`` frame."""
+    core = local_rank_matrix(spark, graph, resets_c.toPandas(), damping, tol, max_iter,
+                             store, checkpoint_every, resume)
+    if core is None:
+        return None
+    qids, node_ids, ranks, iterations, converged, metrics = core
     pdf_out = pd.DataFrame({
-        "query_id": np.repeat(np.asarray(qids, dtype=object), n),
-        "node_id": np.tile(node_ids, nq),
+        "query_id": np.repeat(qids, len(node_ids)),
+        "node_id": np.tile(node_ids, len(qids)),
         "score": ranks.ravel(),
     })
     if output_nodes is not None:

@@ -304,6 +304,48 @@ def test_sessionize_stream_state_survives_restart(spark, tmp_path):
     assert main["n_events"] == 2 and main["total_value"] == 3.0
 
 
+def test_sessionize_stream_rejects_foreign_state_format(spark, tmp_path, monkeypatch):
+    """A restart whose checkpointed state carries another state format
+    tag fails with an error naming both formats, instead of reading the
+    fields with the wrong meaning: launch 1 runs under a foreign tag and
+    leaves a held interval in state, launch 2 runs under this code's tag
+    and meets that state."""
+    src = str(tmp_path / "src_fmt")
+    ckpt = str(tmp_path / "ck_fmt")
+    out = str(tmp_path / "out_fmt")
+    _mk(spark, [(0, T0, 7, "view", 1.0)]).coalesce(1).write.parquet(src)
+
+    def launch():
+        stream = (
+            spark.readStream.schema(
+                "event_id long, ts timestamp, user_id long, "
+                "event_type string, value double")
+            .parquet(src)
+        )
+        q = (
+            ev.sessionize_stream(stream, gap_minutes=30, watermark="3 hours")
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(timeout=300)
+
+    foreign = "sessionize-intervals/0"
+    with monkeypatch.context() as m:
+        m.setattr(ev, "_STATE_FORMAT", foreign)
+        launch()
+    # a second user's event makes launch 2 run a batch; the timeout of
+    # user 7's held interval hands the operator its stored state
+    _mk(spark, [(1, T0 + dt.timedelta(days=1), 8, "view", 1.0)]).coalesce(1) \
+        .write.mode("append").parquet(src)
+    with pytest.raises(Exception) as err:
+        launch()
+    assert foreign in str(err.value) and ev._STATE_FORMAT in str(err.value), err.value
+
+
 @pytest.mark.parametrize("seed", [7, 1731])
 def test_sessionize_stream_randomized_equivalence(spark, tmp_path, seed):
     """Randomized stream ≡ batch: random event times for several users,

@@ -3,9 +3,13 @@ DataFrame retrieval flow vs an independent numpy replication of
 HippoRAG's per-query path (fact scores → phrase weights → link_top_k →
 DPR×0.05 → PPR → sorted passages), sharing only the edge table."""
 
+import dataclasses
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+from hipporag_spark import retrieve as retrieve_mod
 
 from hipporag_spark.embed import embed_batch
 from hipporag_spark.extract import extract_all
@@ -353,18 +357,19 @@ def test_consecutive_calls_match_fresh_retrievers(spark, built):
 
 
 def test_warm_retrieve_job_budget(spark, built, count_jobs):
-    """One warm retrieve() on this fixture runs 36 Spark jobs, at local[4]
-    with 4 shuffle partitions.  The retriever prepares its PPR graph and
-    passage count once; each plan of a call runs once.  A per-call edge
-    count or collect, or a re-run of the reset-vector or phrase-weight
-    plan, adds jobs and fails this budget."""
+    """One warm retrieve() on this fixture, collected, runs 1 Spark job:
+    the local plan's collect of the questions.  The returned frame is
+    built from driver-local Arrow data, so the caller's collect runs
+    none.  The retriever prepares its PPR graph and its fact and passage
+    stores once; any Spark stage back on the warm path adds jobs and
+    fails this budget."""
     r, _, _ = built
     q = spark.createDataFrame(_batch("warmup", QUERIES), "query_id string, question string")
     r.retrieve(q).collect()
     q = spark.createDataFrame(_batch("budget", QUERIES), "query_id string, question string")
     rows, jobs = count_jobs(lambda: r.retrieve(q).collect())
     assert len(rows) == len(QUERIES) * CFG.retrieval_top_k
-    assert jobs <= 36, jobs
+    assert jobs <= 1, jobs
 
 
 def test_warm_calls_keep_cached_relations_bounded(spark, built):
@@ -379,3 +384,122 @@ def test_warm_calls_keep_cached_relations_bounded(spark, built):
         r.retrieve(q).collect()
         counts.append(cached_relations(spark))
     assert counts == [counts[0]] * 10, counts
+
+
+ISOLATED = [
+    "zzalpha zzbeta zzgamma zzdelta zzeps",
+    "yyalpha yybeta yygamma yydelta yyeps",
+]
+# q-zz links only facts of an isolated document whose phrases are kept
+# out of the entity table (no graph-linked fact → pure-DPR fallback); a
+# None question embeds as "" and ties across most facts and passages
+MIXED_QUERIES = QUERIES + [("q-zz", "zzalpha zzbeta zzgamma"), ("q-none", None)]
+
+
+def _tables(spark, docs):
+    corpus = spark.createDataFrame(
+        [(f"r{i}", f"p{i}", f"c{i}", "py", d) for i, d in enumerate(docs)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    t = extract_all(corpus)
+    nodes, edges = build_graph(t)
+    return t, nodes, edges
+
+
+@pytest.fixture(scope="module")
+def mixed(spark):
+    """A retriever over DOCS plus two isolated documents, whose entity
+    table lacks the first isolated document's phrases."""
+    t, nodes, edges = _tables(spark, DOCS + ISOLATED)
+    entities = t["entities"].where(~F.col("phrase").startswith("zz"))
+    return GraphRetriever(spark, nodes, edges, t["chunks"], entities,
+                          t["facts"], t["membership"], CFG)
+
+
+def _keyed(df):
+    return {(x["query_id"], x["rank"]): (x["doc_id"], x["score"]) for x in df.collect()}
+
+
+def _assert_same(a, b):
+    """Same (query_id, rank) → doc_id, scores within 1e-12."""
+    assert a.keys() == b.keys()
+    for key, (doc, score) in a.items():
+        assert doc == b[key][0], key
+        assert abs(score - b[key][1]) < 1e-12, key
+
+
+def _assert_plans_agree(r, qdf, cfg, method="retrieve"):
+    """The local plan (cfg) and the distributed plan (cfg pinned to
+    ppr_mode='dataframe') return the same rows and ranks, scores within
+    1e-12."""
+    old = r.cfg
+    try:
+        r.cfg = cfg
+        assert r._local_plan()
+        local = _keyed(getattr(r, method)(qdf))
+        r.cfg = dataclasses.replace(cfg, ppr_mode="dataframe")
+        assert not r._local_plan()
+        dist = _keyed(getattr(r, method)(qdf))
+    finally:
+        r.cfg = old
+    _assert_same(local, dist)
+    return local
+
+
+@pytest.mark.parametrize("change", [
+    {}, {"dpr_reset_top_m": 2}, {"pad_to_top_k": False}, {"dense_ppr_output": True},
+], ids=["default", "top_m_pad", "no_pad", "dense"])
+def test_local_plan_matches_distributed(spark, mixed, change):
+    cfg = dataclasses.replace(CFG, retrieval_top_k=len(DOCS) + len(ISOLATED), **change)
+    qdf = spark.createDataFrame(MIXED_QUERIES, "query_id string, question string")
+    got = _assert_plans_agree(mixed, qdf, cfg)
+    # q-zz took the pure-DPR fallback: its rows are retrieve_dpr's
+    old = mixed.cfg
+    try:
+        mixed.cfg = cfg
+        dpr = _keyed(mixed.retrieve_dpr(qdf))
+    finally:
+        mixed.cfg = old
+    zz = {k: v for k, v in got.items() if k[0] == "q-zz"}
+    assert zz and zz == {k: v for k, v in dpr.items() if k[0] == "q-zz"}
+
+
+def test_local_retrieve_dpr_matches_distributed(spark, mixed):
+    qdf = spark.createDataFrame(MIXED_QUERIES, "query_id string, question string")
+    _assert_plans_agree(mixed, qdf, CFG, method="retrieve_dpr")
+
+
+def test_rerank_hook_and_dataframe_mode_take_distributed_plan(spark, built, monkeypatch):
+    """A rerank_fn (a DataFrame hook) or ppr_mode='dataframe' routes
+    retrieve() to the distributed plan; the default routes it local."""
+    r, _, _ = built
+    calls = []
+    local = r._retrieve_local
+    monkeypatch.setattr(r, "_retrieve_local",
+                        lambda *a, **kw: calls.append(1) or local(*a, **kw))
+    qdf = spark.createDataFrame(QUERIES, "query_id string, question string")
+    old = r.cfg
+    try:
+        for cfg in (dataclasses.replace(CFG, rerank_fn=lambda top: top),
+                    dataclasses.replace(CFG, ppr_mode="dataframe")):
+            r.cfg = cfg
+            assert len(r.retrieve(qdf).collect()) == len(QUERIES) * CFG.retrieval_top_k
+        assert calls == []
+    finally:
+        r.cfg = old
+    r.retrieve(qdf).collect()
+    assert calls == [1]
+
+
+def test_stores_over_limit_keep_no_local_index(spark, built, monkeypatch):
+    """Above LOCAL_INDEX_LIMIT rows the retriever keeps no LocalIndex and
+    retrieve() runs the distributed plan, with the same results."""
+    r, _, _ = built
+    t, nodes, edges = _tables(spark, DOCS)
+    monkeypatch.setattr(retrieve_mod, "LOCAL_INDEX_LIMIT", len(DOCS) - 1)
+    big = GraphRetriever(spark, nodes, edges, t["chunks"], t["entities"],
+                         t["facts"], t["membership"], CFG)
+    assert big.local_graph is not None and big.local_index is None
+    assert not big._local_plan()
+    qdf = spark.createDataFrame(QUERIES, "query_id string, question string")
+    _assert_same(_keyed(big.retrieve(qdf)), _keyed(r.retrieve(qdf)))
