@@ -63,7 +63,7 @@ from hipporag_spark.ppr import (  # noqa: E402
     _contributions,
     _normalized_edges,
     personalized_pagerank,
-    ppr_from_blocks_batched,
+    ppr_from_blocks,
     prepare_csr_blocks,
 )
 from hipporag_spark.components import connected_components  # noqa: E402
@@ -220,20 +220,20 @@ def _prewarm(blocks_dir: str) -> None:
 
 
 def run_supersteps(cores: int, blocks_dir: str) -> dict:
-    """Steady-state superstep throughput at ``local[cores]`` via the
-    gang-scheduled batched path (one barrier job runs warmup + measured
-    supersteps; per-superstep walls are the slowest partition's in-job
-    time, so scheduler launch latency is excluded exactly as it would be
-    amortized on a long-running cluster job)."""
+    """Steady-state superstep throughput at ``local[cores]`` via
+    ``ppr_from_blocks`` (one barrier job runs warmup + measured
+    supersteps — at most ``ppr.STEPS_PER_JOB``; per-superstep walls are
+    the slowest partition's in-job time, so scheduler launch latency is
+    excluded exactly as it would be amortized on a long-running cluster
+    job)."""
     _prewarm(blocks_dir)
     spark = get_spark(f"bench-ppr-{cores}", cores=cores)
     reset = np.zeros(BENCH_NODES)
     reset[:10] = 1.0
     warmup = 3  # until worker-process block caches saturate
-    res = ppr_from_blocks_batched(
+    res = ppr_from_blocks(
         spark, blocks_dir, reset, damping=0.85, tol=0.0,
         max_iter=MEASURED_STEPS + warmup,
-        supersteps_per_job=MEASURED_STEPS + warmup,
     )
     spark.stop()
     steps = res.metrics[warmup:]
@@ -268,26 +268,20 @@ def _kernel_proc(pid, nprocs, blocks_dir, steps, barrier, q):
 
     with open(os.path.join(blocks_dir, "meta.json")) as f:
         meta = _json.load(f)
-    n, n_blocks = int(meta["n_nodes"]), int(meta["n_blocks"])
+    n = int(meta["n_nodes"])
     unit = bool(meta.get("unit_weights"))
-    layout = meta.get("layout", "modulo")
     existing = sorted(
         int(p.split("block=")[1].rstrip("/").split("/")[0])
         for p in glob.glob(f"{blocks_dir}/blocks/block=*")
     )
     my_blocks = [b for b in existing if b % nprocs == pid]
-    if layout == "relabeled":
-        lens = {b: meta["block_sizes"][b] for b in range(n_blocks)}
-    else:
-        lens = {b: (n - b + n_blocks - 1) // n_blocks for b in range(n_blocks)}
+    lens = meta["block_sizes"]
     cols = ("src_idx", "dst_loc") if unit else ("src_idx", "dst_loc", "wn")
     npy = os.path.join(blocks_dir, "npy")
     inv_w = None
     if unit:
         ow = pq.read_table(os.path.join(blocks_dir, "outw")).to_pandas()
-        idx = ow["idx"].to_numpy()
-        if layout == "relabeled":
-            idx = np.load(os.path.join(npy, "perm.npy"))[idx]
+        idx = np.load(os.path.join(npy, "perm.npy"))[ow["idx"].to_numpy()]
         out_w = np.zeros(n, dtype=np.float64)
         out_w[idx] = ow["out_w"].to_numpy(dtype=np.float64)
         inv_w = np.where(out_w > 0, 1.0 / np.maximum(out_w, 1e-300), 0.0)
@@ -300,7 +294,7 @@ def _kernel_proc(pid, nprocs, blocks_dir, steps, barrier, q):
         for b in my_blocks:
             arrs = get_block(("ctl", b), [], cols, npy_dir=npy)
             block_contrib(arrs[0], arrs[1], rs,
-                          None if unit else arrs[2], lens[b], False)
+                          None if unit else arrs[2], lens[b])
         walls.append((_t.time() - t0) * 1000)
         barrier.wait()
     q.put((pid, walls))

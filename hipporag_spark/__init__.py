@@ -49,7 +49,6 @@ from .ppr import (  # noqa: E402
     personalized_pagerank,
     personalized_pagerank_batch,
     ppr_from_blocks,
-    ppr_from_blocks_batched,
     prepare_csr_blocks,
 )
 from .components import connected_components  # noqa: E402
@@ -69,7 +68,7 @@ __all__ = [
     "fix_broken_generated_json", "tables_from_llm_responses",
     "build_graph", "symmetrize",
     "pagerank", "personalized_pagerank", "personalized_pagerank_batch",
-    "ppr_from_blocks", "ppr_from_blocks_batched", "prepare_csr_blocks",
+    "ppr_from_blocks", "prepare_csr_blocks",
     "connected_components", "core_decomposition", "bfs_distances",
     "label_propagation",
     "triangle_count", "triangle_list",

@@ -7,7 +7,7 @@ under 32-way contention (measured); loading them worker-side from
 page-cached parquet with pyarrow costs ~0.05 s per 50 MB block, and repeat
 hits are free.  Only the small result vectors ever cross the socket.
 
-Cache is bounded by ``HIPPORAG_WORKER_CACHE_MB`` (default 4096) with FIFO
+Cache is bounded by ``HIPPORAG_WORKER_CACHE_MB`` (default 2048) with FIFO
 eviction — on a real cluster each executor hosts a handful of workers, so
 the bound keeps total worker memory far below executor memory.
 """
@@ -60,15 +60,14 @@ def _scratch(name: str, dtype) -> "np.ndarray":
     return buf
 
 
-def block_contrib(si, dloc, ranks, edge_scale, loc_len, per_node: bool) -> "np.ndarray":
+def block_contrib(si, dloc, ranks, edge_scale, loc_len) -> "np.ndarray":
     """One block's contribution slice: ``Σ ranks[src]·scale per local dst``.
 
-    ``per_node=True``: ``edge_scale`` is a per-NODE array (1/out_w, indexed
-    by src — the unit-weight layout); else per-EDGE (wn, aligned with si);
-    ``edge_scale=None``: the caller pre-folded the scale into ``ranks``
-    (``rs = ranks * inv_w`` once per superstep — bitwise identical to the
-    per-edge product, and it removes the second gather, which dominates
-    the kernel).  Chunked with persistent scratch buffers: fresh
+    ``edge_scale`` is per-EDGE (wn, aligned with si), or ``None`` when
+    the caller pre-folded the scale into ``ranks`` (the unit-weight
+    layout: ``rs = ranks * inv_w`` once per superstep — bitwise identical
+    to the per-edge product, and it removes the second gather, which
+    dominates the kernel).  Chunked with persistent scratch buffers: fresh
     multi-hundred-MB temporaries per task would pay first-touch page-fault
     cost every superstep (measured ~2 s/240 MB on this host) and saturate
     DRAM bandwidth at high core counts; 8 MB reused buffers stay
@@ -76,7 +75,6 @@ def block_contrib(si, dloc, ranks, edge_scale, loc_len, per_node: bool) -> "np.n
     """
     c = np.zeros(loc_len, dtype=np.float64)
     w = _scratch("w", np.float64)
-    w2 = _scratch("w2", np.float64)
     dl = _scratch("dl", np.int64)
     m = len(si)
     for a in range(0, m, _CHUNK):
@@ -84,11 +82,7 @@ def block_contrib(si, dloc, ranks, edge_scale, loc_len, per_node: bool) -> "np.n
         k = b - a
         np.take(ranks, si[a:b], out=w[:k])
         if edge_scale is not None:
-            if per_node:
-                np.take(edge_scale, si[a:b], out=w2[:k])
-                w[:k] *= w2[:k]
-            else:
-                w[:k] *= edge_scale[a:b]
+            w[:k] *= edge_scale[a:b]
         # cast-copy the (possibly uint16) local dst index into a reused
         # int64 buffer: bincount would otherwise allocate its own copy
         dl[:k] = dloc[a:b]
@@ -113,7 +107,6 @@ def get_block(
     key: tuple,
     files: list[str],
     cols: tuple = ("src_idx", "dst_idx", "wn"),
-    limit_bytes: int | None = None,
     npy_dir: str | None = None,
 ):
     """Fetch the requested block columns as numpy arrays, cached.
@@ -122,12 +115,10 @@ def get_block(
     zero-copy views over the shared OS page cache, so the cache entry
     costs ~nothing per worker and N workers hold the data once (no decode,
     no allocation, no first-touch page-fault churn per superstep).
-    Fallback: parquet decode, bounded by ``limit_bytes`` (callers size it
-    as total_budget / parallelism so N workers never collectively exceed
-    the budget).
+    Fallback: parquet decode, bounded per worker process by
+    ``HIPPORAG_WORKER_CACHE_MB``.
     """
     global _CACHE_BYTES
-    limit = _LIMIT if limit_bytes is None else limit_bytes
     hit = _CACHE.get(key)
     if hit is not None:
         return hit
@@ -140,10 +131,10 @@ def get_block(
             return arrs
     arrs = _load(files, cols)
     nbytes = sum(a.nbytes for a in arrs)
-    while _CACHE and _CACHE_BYTES + nbytes > limit:
+    while _CACHE and _CACHE_BYTES + nbytes > _LIMIT:
         _, old = _CACHE.popitem(last=False)
         _CACHE_BYTES -= sum(a.nbytes for a in old)
-    if nbytes <= limit:
+    if nbytes <= _LIMIT:
         _CACHE[key] = arrs
         _CACHE_BYTES += nbytes
     return arrs

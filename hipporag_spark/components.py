@@ -50,6 +50,8 @@ def connected_components(
     mode: str = "auto",
     local_edge_limit: int = 2_000_000,
 ) -> CCResult:
+    if mode not in ("auto", "local", "star", "dataframe"):
+        raise ValueError(f"unknown connected-components mode {mode!r}")
     und = _undirected_pairs(edges).persist()
     n_edges = und.count()
     nodes = und.select(F.col("src").alias("node_id")).distinct()

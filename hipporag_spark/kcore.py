@@ -95,6 +95,8 @@ def core_decomposition(
     Theorem 1).  ``max_iter`` is a lineage guard — real graphs converge
     in O(10) supersteps because estimates fall geometrically.
     """
+    if mode not in ("auto", "local", "dataframe"):
+        raise ValueError(f"unknown core-decomposition mode {mode!r}")
     und = _simple_graph(edges).persist()
     n_und = und.count()
     if mode == "auto":

@@ -53,6 +53,8 @@ def label_propagation(
     mode: str = "auto",
     local_edge_limit: int = 2_000_000,
 ) -> LPAResult:
+    if mode not in ("auto", "local", "dataframe"):
+        raise ValueError(f"unknown label-propagation mode {mode!r}")
     sym = symmetrize(edges).where(F.col("src") != F.col("dst")).persist()
     n_sym = sym.count()
     if mode == "auto":

@@ -226,3 +226,11 @@ def test_frontier_lpa_matches_reference_on_random_graphs(spark, seed):
     assert res.converged
     got = {r["node_id"]: r["label"] for r in res.labels.collect()}
     assert got == lpa_exact(rows, max_iter=30)
+
+
+@pytest.mark.parametrize("op", [connected_components, label_propagation, core_decomposition])
+def test_unknown_mode_raises(spark, op):
+    """A mode string no operator knows fails loudly, naming the mode,
+    instead of silently running the distributed loop."""
+    with pytest.raises(ValueError, match="'starr'"):
+        op(spark, _edges_df(spark, GRAPHS[0][1]), mode="starr")

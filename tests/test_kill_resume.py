@@ -2,7 +2,8 @@
 driver process runs block-superstep PPR — single-reset and blocks-mode
 batch — with per-superstep checkpoints, is SIGKILLed mid-iteration, and a
 fresh run with ``resume=True`` continues from the last durable checkpoint
-to the same converged scores as an uninterrupted run."""
+to the same converged scores as an uninterrupted run, and clears the
+slice-exchange directory the killed run left behind."""
 
 import os
 import signal
@@ -15,6 +16,7 @@ import pytest
 
 from hipporag_spark.checkpoint import CheckpointStore
 from hipporag_spark.ppr import (
+    _exchange_dir,
     personalized_pagerank_batch,
     ppr_from_blocks,
     prepare_csr_blocks,
@@ -92,6 +94,8 @@ def test_sigkill_mid_iteration_then_resume(spark, tmp_path):
 
     killed_at = store.latest_step()
     assert killed_at is not None and killed_at >= 3
+    xdir = _exchange_dir(spark.sparkContext, blocks, store)
+    assert os.path.isdir(xdir)  # the kill skipped the victim's cleanup
 
     # resume in THIS process from the durable checkpoint
     resumed = ppr_from_blocks(spark, blocks, reset, damping=0.85, tol=1e-11,
@@ -99,6 +103,7 @@ def test_sigkill_mid_iteration_then_resume(spark, tmp_path):
     assert resumed.metrics[0]["superstep"] == killed_at + 1
     rv = resumed.ranks.toPandas().sort_values("node_id")["score"].to_numpy()
     assert np.allclose(fv, rv, atol=1e-9)
+    assert not os.path.exists(xdir)
 
 
 BATCH_RUNNER = """
@@ -163,6 +168,8 @@ def test_sigkill_blocks_batch_then_resume(spark, tmp_path, checkpoint_writes):
     assert killed_at is not None and killed_at >= 3
     first = CheckpointStore(os.path.join(ckpt, "chunk=0"))
     assert first.lineage()[-1]["metrics"]["l1_delta"] < tol
+    xdirs = [_exchange_dir(spark.sparkContext, str(tmp_path), s) for s in (first, second)]
+    assert os.path.isdir(xdirs[1])  # the kill skipped the victim's cleanup
 
     resumed = scores(personalized_pagerank_batch(
         spark, edges, resets, checkpoint_dir=ckpt, checkpoint_every=1,
@@ -172,3 +179,4 @@ def test_sigkill_blocks_batch_then_resume(spark, tmp_path, checkpoint_writes):
     assert checkpoint_writes[0][1] == killed_at + 1
     assert set(resumed) == set(full)
     assert max(abs(resumed[k] - full[k]) for k in full) < 1e-12
+    assert not any(os.path.exists(x) for x in xdirs)

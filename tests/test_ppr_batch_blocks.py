@@ -116,3 +116,23 @@ def test_blocks_resume_skips_converged_chunks(spark, frames, tmp_path, checkpoin
     again = _scores(personalized_pagerank_batch(spark, edges, resets, resume=True, **kw))
     assert checkpoint_writes == []
     assert again == first
+
+
+def test_blocks_batch_job_budget(spark, frames, tmp_path, count_jobs):
+    """A blocks batch runs each query chunk's supersteps as barrier jobs of
+    up to ``STEPS_PER_JOB`` supersteps: Σ_c ⌈iterations_c / 16⌉ superstep
+    jobs on top of the layout/setup jobs, not one job per superstep."""
+    from hipporag_spark.ppr import STEPS_PER_JOB, _run
+
+    edges, resets = frames
+    res, jobs = count_jobs(lambda: _run(
+        spark, edges, resets, 0.5, 1e-13, 500, mode="blocks", n_blocks=4,
+        blocks_dir=str(tmp_path / "b5"), query_chunk=2))
+    # supersteps restart at 0 in every chunk
+    starts = [i for i, m in enumerate(res.metrics) if m["superstep"] == 0]
+    iterations = np.diff(starts + [len(res.metrics)])
+    superstep_jobs = sum(-(-int(i) // STEPS_PER_JOB) for i in iterations)
+    assert len(iterations) == 2 and superstep_jobs < sum(iterations)
+    assert all(m["mode"] == "blocks" for m in res.metrics)
+    # 44 layout/setup jobs; one job per superstep made it 44 + 64 = 108
+    assert jobs == 44 + superstep_jobs == 48

@@ -7,11 +7,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from hipporag_spark import ppr
 from hipporag_spark.checkpoint import CheckpointStore
 from hipporag_spark.ppr import (
     personalized_pagerank,
     ppr_from_blocks,
-    ppr_from_blocks_batched,
     prepare_csr_blocks,
 )
 
@@ -102,25 +102,25 @@ def test_blocks_reject_zero_reset(spark, tmp_path):
 
 
 @pytest.mark.parametrize("unit", [True, False])
-def test_batched_matches_per_job(spark, tmp_path, unit):
-    """Gang-scheduled K-supersteps-per-job path ≡ the per-job path bitwise
-    (same kernel and blend order)."""
+def test_batched_matches_per_job(spark, tmp_path, unit, monkeypatch):
+    """K supersteps per barrier job ≡ one superstep per job, bitwise (the
+    same kernel and blend order; the rank matrix crosses job boundaries
+    unchanged)."""
     edges = _random_edges(spark, seed=4, weighted=not unit)
     out = str(tmp_path / f"blocks_batched_{unit}")
     prepare_csr_blocks(spark, edges, out, n_blocks=4, int_ids=N, unit_weights=unit)
     reset = np.zeros(N)
     reset[[1, 200, 499]] = [0.25, 0.5, 0.25]
 
+    monkeypatch.setattr(ppr, "STEPS_PER_JOB", 1)
     base = ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-11, max_iter=200)
-    got = ppr_from_blocks_batched(
-        spark, out, reset, damping=0.85, tol=1e-11, max_iter=200,
-        supersteps_per_job=7,
-    )
+    monkeypatch.setattr(ppr, "STEPS_PER_JOB", 7)
+    got = ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-11, max_iter=200)
     bv = base.ranks.toPandas().sort_values("node_id")["score"].to_numpy()
     gv = got.ranks.toPandas().sort_values("node_id")["score"].to_numpy()
     assert np.array_equal(bv, gv)  # bitwise: identical float ops in order
     assert got.converged and got.iterations == base.iterations
-    assert all(m["mode"] == "csr_barrier" for m in got.metrics)
+    assert all(m["mode"] == "blocks" for m in got.metrics)
 
 
 def test_batched_checkpoint_resume(spark, tmp_path):
@@ -130,19 +130,18 @@ def test_batched_checkpoint_resume(spark, tmp_path):
     reset = np.zeros(N)
     reset[:3] = 1.0
 
-    full = ppr_from_blocks_batched(spark, out, reset, damping=0.85, tol=1e-11,
-                                   max_iter=200, supersteps_per_job=8)
+    full = ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-11, max_iter=200)
     store = CheckpointStore(str(tmp_path / "ckpt_b"))
-    ppr_from_blocks_batched(spark, out, reset, damping=0.85, tol=1e-11,
-                            max_iter=8, supersteps_per_job=8, store=store)
+    ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-11, max_iter=8,
+                    store=store, checkpoint_every=8)
     latest = store.latest_step()
     assert latest == 7
     # per-partition lineage recorded with the batch checkpoint
     manifest = store.lineage()[-1]
     assert manifest["partitions"] and all("wall_ms" in p for p in manifest["partitions"])
-    resumed = ppr_from_blocks_batched(spark, out, reset, damping=0.85, tol=1e-11,
-                                      max_iter=200, supersteps_per_job=8,
-                                      store=store, resume=True)
+    resumed = ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-11,
+                              max_iter=200, store=store, checkpoint_every=8,
+                              resume=True)
     fv = full.ranks.toPandas().sort_values("node_id")["score"].to_numpy()
     rv = resumed.ranks.toPandas().sort_values("node_id")["score"].to_numpy()
     assert np.allclose(fv, rv, atol=1e-9)
@@ -150,13 +149,11 @@ def test_batched_checkpoint_resume(spark, tmp_path):
 
 
 def test_string_id_layout_matches_local(spark, tmp_path):
-    """String-id branch of prepare_csr_blocks (id_map built by
-    range-partition + per-partition offsets — no single-partition global
-    window, VERDICT.md round-1 item 8): scores equal the local mode after
-    translating through the persisted id_map."""
-    import numpy as np
-
-    from hipporag_spark.ppr import personalized_pagerank
+    """String ids densified by ``_dense_ids`` (range-partition +
+    per-partition offsets — no single-partition global window, VERDICT.md
+    round-1 item 8), then laid out by prepare_csr_blocks: scores equal
+    the local mode after translating through the persisted id map."""
+    from hipporag_spark.ppr import _dense_ids
 
     rng = np.random.default_rng(5)
     rows = []
@@ -166,10 +163,18 @@ def test_string_id_layout_matches_local(spark, tmp_path):
             rows.append((f"node{u:02d}", f"node{v:02d}", float(rng.integers(1, 4))))
     edges = spark.createDataFrame(rows, "src string, dst string, weight double")
     out = str(tmp_path / "strblocks")
-    meta = prepare_csr_blocks(spark, edges, out, n_blocks=4)
-    assert meta["id_map_path"] is not None
-    id_map = {r["node_id"]: r["idx"] for r in
-              spark.read.parquet(meta["id_map_path"]).collect()}
+    universe = edges.select(F.col("src").alias("node_id")).unionByName(
+        edges.select(F.col("dst").alias("node_id"))).distinct()
+    idx, n = _dense_ids(spark, universe, str(tmp_path / "id_map"))
+    edges_int = (
+        edges.join(idx.withColumnRenamed("node_id", "src")
+                      .withColumnRenamed("idx", "src_i"), "src")
+        .join(idx.withColumnRenamed("node_id", "dst")
+                 .withColumnRenamed("idx", "dst_i"), "dst")
+        .select(F.col("src_i").alias("src"), F.col("dst_i").alias("dst"), "weight")
+    )
+    prepare_csr_blocks(spark, edges_int, out, n_blocks=4, int_ids=n)
+    id_map = {r["node_id"]: r["idx"] for r in idx.collect()}
     # dense ids are the global sorted rank, 0..n-1, regardless of
     # partitioning
     assert sorted(id_map.values()) == list(range(len(id_map)))
@@ -189,12 +194,12 @@ def test_string_id_layout_matches_local(spark, tmp_path):
         assert abs(got[str(id_map[r["node_id"]])] - r["score"]) < 1e-9, r["node_id"]
 
 
-def test_batched_isolated_ids_blend(spark, tmp_path):
+def test_batched_isolated_ids_blend(spark, tmp_path, monkeypatch):
     """Node ids declared via int_ids but absent from every edge sit past
-    the last block span in the relabeled layout (no task's slice owns
-    them).  The batched path must still blend them from the reset each
-    superstep — bitwise equal to the zero-filled per-job path — instead
-    of leaving uninitialized memory in the rank vector."""
+    the last block span in the relabeled layout (no block owns them).
+    The barrier job must still blend them from the reset each superstep —
+    bitwise equal across job lengths — instead of leaving uninitialized
+    memory in the rank vector."""
     n = 64
     pdf = pd.DataFrame({
         "src": [0, 1, 2, 3, 4, 5, 6, 7],
@@ -208,11 +213,12 @@ def test_batched_isolated_ids_blend(spark, tmp_path):
     reset = np.zeros(n)
     reset[[0, 30, 63]] = [0.5, 0.25, 0.25]  # seeds include isolated ids
 
+    monkeypatch.setattr(ppr, "STEPS_PER_JOB", 1)
     base = ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-9,
                            max_iter=300)
-    got = ppr_from_blocks_batched(spark, out, reset, damping=0.85,
-                                  tol=1e-9, max_iter=300,
-                                  supersteps_per_job=5)
+    monkeypatch.setattr(ppr, "STEPS_PER_JOB", 5)
+    got = ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-9,
+                          max_iter=300)
     bv = base.ranks.toPandas().sort_values("node_id")["score"].to_numpy()
     gv = got.ranks.toPandas().sort_values("node_id")["score"].to_numpy()
     assert np.array_equal(bv, gv)
@@ -227,7 +233,7 @@ def test_batched_isolated_ids_blend(spark, tmp_path):
 @pytest.mark.parametrize("unit", [True, False])
 def test_blocks_distributed_assignment_matches_reference(spark, tmp_path, unit,
                                                          monkeypatch):
-    """assign_mode='distributed' (the large-V path: hub-LPT + cumulative-
+    """The distributed assignment (the large-V path: hub-LPT + cumulative-
     degree range split, VERDICT r3 item 2) must (a) never collect a
     per-node relation to the driver — toPandas is poisoned for the whole
     prepare call — and (b) produce a layout whose PPR scores match the
@@ -243,8 +249,7 @@ def test_blocks_distributed_assignment_matches_reference(spark, tmp_path, unit,
     monkeypatch.setattr(pssql.DataFrame, "toPandas", _boom)
     try:
         meta = prepare_csr_blocks(spark, edges, out, n_blocks=4, int_ids=N,
-                                  unit_weights=unit,
-                                  assign_mode="distributed")
+                                  unit_weights=unit, lpt_node_limit=0)
     finally:
         monkeypatch.undo()
     assert meta["layout"] == "relabeled"
@@ -276,7 +281,7 @@ def test_blocks_distributed_assignment_is_balanced(spark, tmp_path):
     edges = spark.createDataFrame(pdf)
     out = str(tmp_path / "blocks_skew")
     prepare_csr_blocks(spark, edges, out, n_blocks=8, int_ids=N,
-                       unit_weights=True, assign_mode="distributed")
+                       unit_weights=True, lpt_node_limit=0)
     per_block = {
         r["block"]: r["cnt"]
         for r in spark.read.parquet(f"{out}/blocks")
