@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .graph import undirected_pairs
+
 
 @dataclass
 class CCResult:
@@ -34,12 +36,6 @@ class CCResult:
     iterations: int
     converged: bool
     metrics: list[dict] = field(default_factory=list)
-
-
-def _undirected_pairs(edges: DataFrame) -> DataFrame:
-    fwd = edges.select("src", "dst")
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return fwd.unionByName(rev).where(F.col("src") != F.col("dst")).distinct()
 
 
 def connected_components(
@@ -52,7 +48,7 @@ def connected_components(
 ) -> CCResult:
     if mode not in ("auto", "local", "star", "dataframe"):
         raise ValueError(f"unknown connected-components mode {mode!r}")
-    und = _undirected_pairs(edges).persist()
+    und = undirected_pairs(edges).persist()
     n_edges = und.count()
     nodes = und.select(F.col("src").alias("node_id")).distinct()
     if extra_nodes is not None:

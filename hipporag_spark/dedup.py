@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .similarity import _srp_signature, cosine_expr
+
 __all__ = [
     "normalize_for_dedup",
     "exact_duplicates",
@@ -292,8 +294,8 @@ def embedding_neardup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs ``(id_a, id_b, cos)``, a < b.
 
-    Cosine via Catalyst higher-order functions (``zip_with`` +
-    ``aggregate``) — JVM-side, no UDF.  Modes (the graph algorithms'
+    Cosine via :func:`~.similarity.cosine_expr` (Catalyst higher-order
+    functions) — JVM-side, no UDF.  Modes (the graph algorithms'
     ``mode="auto"`` pattern, VERDICT r2 "What's wrong" #5):
 
     - ``"exact"``  all-pairs self-join — the exact oracle; quadratic, for
@@ -314,20 +316,6 @@ def embedding_neardup_pairs(
       callers needing exhaustive recall above the limit should run
       ``knn.cosine_topk`` or lower the threshold margin accordingly.
     """
-    def norm(c):
-        return F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def cos_ab():
-        return (dot(F.col("va"), F.col("vb"))
-                / (norm(F.col("va")) * norm(F.col("vb")))).alias("cos")
-
     if mode not in ("auto", "exact", "lsh"):
         raise ValueError(f"unknown mode {mode!r}")
     e = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
@@ -339,12 +327,10 @@ def embedding_neardup_pairs(
         return (
             a.crossJoin(b)
             .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", cos_ab())
+            .select("id_a", "id_b", cosine_expr(F.col("va"), F.col("vb")).alias("cos"))
             .where(F.col("cos") >= threshold)
         )
     import numpy as np
-
-    from .similarity import _srp_signature
 
     dim = len(e.select("v").first()["v"])
     planes = np.random.default_rng(seed).standard_normal((n_bits, dim))
@@ -362,7 +348,7 @@ def embedding_neardup_pairs(
     return (
         a.join(b, "bucket")
         .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cos_ab())
+        .select("id_a", "id_b", cosine_expr(F.col("va"), F.col("vb")).alias("cos"))
         .where(F.col("cos") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
     )

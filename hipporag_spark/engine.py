@@ -104,56 +104,59 @@ class HippoIndex:
         is O(batch): only inserted rows are encoded, counted, KNN-queried
         and re-merged."""
         t = extract_all(corpus)
-        counts = {}
-        counts["chunks"], _ = self.cat.upsert_delta(
-            "chunks", t["chunks"], key="chunk_id")
+        try:
+            counts = {}
+            counts["chunks"], _ = self.cat.upsert_delta(
+                "chunks", t["chunks"], key="chunk_id")
 
-        # restrict downstream inserts to chunks not previously indexed is
-        # automatic: per-chunk rows upsert on their composite key
-        counts["entities"], new_entities = self.cat.upsert_delta(
-            "entities", t["entities"], key="entity_id")
-        membership = t["membership"].withColumn(
-            "mkey", F.concat_ws(_SEP, "entity_id", "chunk_id")
-        )
-        counts["membership"], new_membership = self.cat.upsert_delta(
-            "membership", membership, key="mkey")
-        facts = t["facts"].withColumn(
-            "fkey", F.concat_ws(_SEP, "chunk_id", "subject", "predicate", "object")
-        )
-        counts["facts"], new_facts = self.cat.upsert_delta("facts", facts, key="fkey")
-        fact_store = (
-            t["facts"].dropDuplicates(["subject", "predicate", "object"])
-            .select(_fact_key().alias("fact_id"), "subject", "predicate", "object")
-        )
-        counts["fact_store"], _ = self.cat.upsert_delta(
-            "fact_store", fact_store, key="fact_id")
+            # restrict downstream inserts to chunks not previously indexed is
+            # automatic: per-chunk rows upsert on their composite key
+            counts["entities"], new_entities = self.cat.upsert_delta(
+                "entities", t["entities"], key="entity_id")
+            membership = t["membership"].withColumn(
+                "mkey", F.concat_ws(_SEP, "entity_id", "chunk_id")
+            )
+            counts["membership"], new_membership = self.cat.upsert_delta(
+                "membership", membership, key="mkey")
+            facts = t["facts"].withColumn(
+                "fkey", F.concat_ws(_SEP, "chunk_id", "subject", "predicate", "object")
+            )
+            counts["facts"], new_facts = self.cat.upsert_delta("facts", facts, key="fkey")
+            fact_store = (
+                t["facts"].dropDuplicates(["subject", "predicate", "object"])
+                .select(_fact_key().alias("fact_id"), "subject", "predicate", "object")
+            )
+            counts["fact_store"], _ = self.cat.upsert_delta(
+                "fact_store", fact_store, key="fact_id")
 
-        # embedding stores: encode ONLY hashes missing from the store
-        # (reference embedding_store.py:63-90)
-        counts["entity_vdb"] = self._embed_store(
-            "entity_vdb", self.cat.read("entities"), "entity_id", "phrase")
-        counts["chunk_vdb"] = self._embed_store(
-            "chunk_vdb", self.cat.read("chunks").select("chunk_id", "content"),
-            "chunk_id", "content")
-        fact_texts = self.cat.read("fact_store").select(
-            "fact_id", F.concat_ws(" ", "subject", "predicate", "object").alias("fact_text"))
-        counts["fact_vdb"] = self._embed_store("fact_vdb", fact_texts, "fact_id", "fact_text")
+            # embedding stores: encode ONLY hashes missing from the store
+            # (reference embedding_store.py:63-90)
+            counts["entity_vdb"] = self._embed_store(
+                "entity_vdb", self.cat.read("entities"), "entity_id", "phrase")
+            counts["chunk_vdb"] = self._embed_store(
+                "chunk_vdb", self.cat.read("chunks").select("chunk_id", "content"),
+                "chunk_id", "content")
+            fact_texts = self.cat.read("fact_store").select(
+                "fact_id", F.concat_ws(" ", "subject", "predicate", "object").alias("fact_text"))
+            counts["fact_vdb"] = self._embed_store("fact_vdb", fact_texts, "fact_id", "fact_text")
 
-        if self.synonyms:
-            new_syn, counts["synonym_edges"] = self._update_synonyms(new_entities)
-        else:
-            new_syn, counts["synonym_edges"] = None, 0
-        fact_touched = self._apply_fact_delta(new_facts)
-        self._upsert_nodes(t)
-        if self.synonyms and self.synonym_queries == "all":
-            # reference-exact mode re-queries every entity → any pair may
-            # have changed → full rebuild (the reference's own cost model)
-            self._rebuild_graph_full()
-        else:
-            self._update_edges(fact_touched, new_membership, new_syn)
-        if new_syn is not None:
-            new_syn.unpersist()
-        return counts
+            if self.synonyms:
+                new_syn, counts["synonym_edges"] = self._update_synonyms(new_entities)
+            else:
+                new_syn, counts["synonym_edges"] = None, 0
+            fact_touched = self._apply_fact_delta(new_facts)
+            self._upsert_nodes(t)
+            if self.synonyms and self.synonym_queries == "all":
+                # reference-exact mode re-queries every entity → any pair may
+                # have changed → full rebuild (the reference's own cost model)
+                self._rebuild_graph_full()
+            else:
+                self._update_edges(fact_touched, new_membership, new_syn)
+            if new_syn is not None:
+                new_syn.unpersist()
+            return counts
+        finally:
+            t["tokens"].unpersist()
 
     # ------------------------------------------------------------------
     def _embed_store(self, name: str, src: DataFrame, key: str, text_col: str) -> int:

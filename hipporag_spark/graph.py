@@ -142,6 +142,15 @@ def build_graph(
     return nodes, edges
 
 
+def undirected_pairs(edges: DataFrame) -> DataFrame:
+    """Distinct undirected neighbor pairs ``(src, dst)``, both orientations,
+    self-loops dropped — the simple graph that components, triangles,
+    coreness and hop distance are defined on."""
+    fwd = edges.select("src", "dst")
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return fwd.unionByName(rev).where(F.col("src") != F.col("dst")).distinct()
+
+
 def symmetrize(edges: DataFrame) -> DataFrame:
     """Directed edge rows → symmetric weight table ``(src, dst, weight)``
     with parallel edges and both orientations summed — the undirected

@@ -60,6 +60,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .graph import undirected_pairs
+
 __all__ = ["CoreResult", "core_decomposition", "bfs_distances"]
 
 
@@ -69,14 +71,6 @@ class CoreResult:
     iterations: int
     converged: bool
     metrics: list[dict] = field(default_factory=list)
-
-
-def _simple_graph(edges: DataFrame) -> DataFrame:
-    """Distinct undirected neighbor pairs, self-loops dropped — the graph
-    both coreness and hop distance are defined on."""
-    fwd = edges.select("src", "dst")
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return fwd.unionByName(rev).where(F.col("src") != F.col("dst")).distinct()
 
 
 def core_decomposition(
@@ -97,7 +91,7 @@ def core_decomposition(
     """
     if mode not in ("auto", "local", "dataframe"):
         raise ValueError(f"unknown core-decomposition mode {mode!r}")
-    und = _simple_graph(edges).persist()
+    und = undirected_pairs(edges).persist()
     n_und = und.count()
     if mode == "auto":
         mode = "local" if n_und <= local_edge_limit else "dataframe"
@@ -218,7 +212,7 @@ def bfs_distances(
     absent from the result (not NULL-padded), so the output size is the
     reached ball, not |V|.
     """
-    und = _simple_graph(edges).persist()
+    und = undirected_pairs(edges).persist()
     und.count()
     if not isinstance(seeds, DataFrame):
         seeds_df = spark.createDataFrame(

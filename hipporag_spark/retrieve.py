@@ -106,17 +106,6 @@ class RetrievalConfig:
     # reference's dense contract via :func:`pad_to_dense_topk`, filling
     # top-k with zero-score rows ordered by doc_id.
     dpr_reset_top_m: Optional[int] = None
-    # Dense top-k fill contract (ADVICE r4 item 1).  True (default):
-    # retrieve() probes the ranked relation for under-filled queries
-    # (one scalar action over the ≤ k·|Q|-row cache) and pads them with
-    # zero-score rows ordered by doc_id, so every query returns exactly
-    # min(retrieval_top_k, |passages|) rows — the reference's dense
-    # score-vector behavior.  False: skip the probe and the pad; a
-    # query may return fewer rows when dpr_reset_top_m drops a
-    # graph-unreachable passage's reset (or the min-max-minimum passage
-    # is unreachable).  A documented scale/latency hatch: saves one
-    # small driver round-trip per retrieve() call.
-    pad_to_top_k: bool = True
     # Dense PPR output contract: when True, retrieve() asks batch PPR for
     # the reference's dense score relation (a row for EVERY universe node
     # per query, HippoRAG.py:1600-1613) instead of the sparse passage-set
@@ -505,7 +494,7 @@ class GraphRetriever:
             doc_scores.withColumn("rank", F.row_number().over(wnd))
             .where(F.col("rank") <= cfg.retrieval_top_k)
         ).select("query_id", "doc_id", "score", "rank")
-        if not cfg.dense_ppr_output and cfg.pad_to_top_k:
+        if not cfg.dense_ppr_output:
             # persist the ≤ k·|Q|-row ranked relation: the under-fill
             # probe below materializes it (running the PPR job exactly
             # once), and the final plan — plus the pad plan's counts and
@@ -615,12 +604,9 @@ class GraphRetriever:
             # the dense relation holds every universe passage, zeros too
             key[:, ~inside] = np.inf
             n_keep = np.full(len(rq), min(k, int(inside.sum())))
-        elif cfg.pad_to_top_k:
+        else:
             # zero-score rows ordered by doc_id fill top-k
             n_keep = np.full(len(rq), min(k, len(ix.passage_ids)))
-        else:
-            # sparse: nonzero scores only
-            n_keep = np.minimum(k, (scores != 0).sum(axis=1))
         # stable on -score over id-sorted columns: ties by doc_id ascending
         order = np.argsort(key, axis=1, kind="stable")[:, :k]
         rows = np.repeat(np.arange(len(rq)), n_keep)

@@ -27,18 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _undirected(edges: DataFrame) -> DataFrame:
-    fwd = edges.select("src", "dst")
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return fwd.unionByName(rev).where(F.col("src") != F.col("dst")).distinct()
+from .graph import undirected_pairs
 
 
 def oriented_edges(edges: DataFrame, ordering: str = "id") -> DataFrame:
     """Distinct undirected pairs oriented low→high (self-loops and
     multiplicities dropped).  ``ordering="id"``: lexicographic node id.
     ``ordering="degree"``: (degree, id) rank — hub-proof wedge bound."""
-    und = _undirected(edges)
+    und = undirected_pairs(edges)
     if ordering == "id":
         return und.where(F.col("src") < F.col("dst"))
     deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -79,7 +75,7 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     over the simple undirected graph.  One aggregate over the degree
     table plus the oriented two-join count; returns a single row
     ``(n_triangles, n_wedges, global_cc)``."""
-    und = _undirected(edges)
+    und = undirected_pairs(edges)
     deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     wedges_row = deg.agg(
         F.sum(F.col("deg") * (F.col("deg") - 1) / 2).cast("long").alias("w")

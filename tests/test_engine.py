@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hipporag_spark.engine import HippoIndex
+from tests.conftest import cached_relations
 
 BATCH1 = [
     ("o/r1", "a.py", "c1", "py", "alpha beta gamma"),
@@ -40,8 +41,11 @@ def test_index_and_reindex_idempotent(spark, engine):
 
 
 def test_incremental_index_accumulates(spark, engine):
+    cached = cached_relations(spark)
     engine.index(spark.createDataFrame(BATCH1, SCHEMA))
     c2 = engine.index(spark.createDataFrame(BATCH2, SCHEMA))
+    # index() releases what it cached (extract_all's persisted tokens)
+    assert cached_relations(spark) == cached
     assert c2["chunks"] == 2
     # new entities: solo, unique, tokens (delta/epsilon already present)
     assert c2["entities"] == 3
@@ -265,6 +269,35 @@ def test_replace_keys_is_one_snapshot(spark, tmp_path):
     assert n_versions() == before + 1
     rows = {r["key"]: r["v"] for r in cat.read("t").collect()}
     assert rows == {"a": 1, "b": 20, "c": 3, "d": 40}
+
+
+def test_replace_keys_cost_does_not_track_file_count(spark, tmp_path, count_jobs):
+    """The copy-on-write merge finds the data dirs a key touches in one
+    aggregate job: a one-key replace_keys runs as many jobs on an 8-file
+    table as on a 1-file table holding the same rows, with equal results."""
+    from hipporag_spark.catalog import Catalog
+
+    schema = "key string, v int"
+    rows = [(f"k{i}", i) for i in range(16)]
+    one = Catalog(spark, str(tmp_path / "one"))
+    one.write("t", spark.createDataFrame(rows, schema))
+    eight = Catalog(spark, str(tmp_path / "eight"))
+    eight.write("t", spark.createDataFrame(rows[:2], schema))
+    for i in range(2, 16, 2):
+        eight.append("t", spark.createDataFrame(rows[i:i + 2], schema))
+    assert (one.file_count("t"), eight.file_count("t")) == (1, 8)
+
+    results = []
+    for cat in (one, eight):
+        removed, jobs = count_jobs(lambda: cat.replace_keys(
+            "t", spark.createDataFrame([("k5",)], "key string"),
+            spark.createDataFrame([("k5", 50)], schema), key="key"))
+        results.append((removed, jobs, sorted(cat.read("t").collect())))
+    (removed1, jobs1, rows1), (removed8, jobs8, rows8) = results
+    assert removed1 == removed8 == 1
+    assert jobs8 == jobs1
+    assert rows8 == rows1 == sorted(
+        spark.createDataFrame(rows[:5] + [("k5", 50)] + rows[6:], schema).collect())
 
 
 def test_delete_keys_selects_key_by_name(spark, tmp_path):

@@ -447,8 +447,8 @@ def _assert_plans_agree(r, qdf, cfg, method="retrieve"):
 
 
 @pytest.mark.parametrize("change", [
-    {}, {"dpr_reset_top_m": 2}, {"pad_to_top_k": False}, {"dense_ppr_output": True},
-], ids=["default", "top_m_pad", "no_pad", "dense"])
+    {}, {"dpr_reset_top_m": 2}, {"dense_ppr_output": True},
+], ids=["default", "top_m_pad", "dense"])
 def test_local_plan_matches_distributed(spark, mixed, change):
     cfg = dataclasses.replace(CFG, retrieval_top_k=len(DOCS) + len(ISOLATED), **change)
     qdf = spark.createDataFrame(MIXED_QUERIES, "query_id string, question string")
