@@ -58,7 +58,10 @@ instead of reading the wrong columns.
 
 from __future__ import annotations
 
+import glob
 import hashlib
+import heapq
+import json
 import os
 import shutil
 import tempfile
@@ -227,9 +230,9 @@ def personalized_pagerank_batch(
         and skips chunks that had converged.
 
     Every mode checkpoints through ``checkpoint_dir`` every
-    ``checkpoint_every`` supersteps and at convergence (``local`` and
-    ``blocks`` also when they stop at ``max_iter``), and resumes from the
-    latest checkpoint with ``resume=True``.
+    ``checkpoint_every`` supersteps, at convergence and when it stops at
+    ``max_iter``, and resumes from the latest checkpoint with
+    ``resume=True``.
 
     ``output_nodes`` (VERDICT r3 "What's wrong" #2): the default output
     is DENSE — one row per (universe node × query), the reference's
@@ -623,7 +626,8 @@ def _batch_dataframe(spark, sym, resets_c, damping, tol, max_iter,
         m = {"superstep": it, "l1_delta": delta, "edges_processed": int(n_edges),
              "wall_ms": (time.time() - t0) * 1000, "mode": "dataframe"}
         metrics.append(m)
-        if store is not None and (it % checkpoint_every == 0 or converged):
+        if store is not None and (it % checkpoint_every == 0 or converged
+                                  or it == max_iter - 1):
             store.write(it, ranks, m, state_format=_TABLE_STATE)
         if converged:
             break
@@ -665,36 +669,47 @@ def _batch_dataframe(spark, sym, resets_c, damping, tol, max_iter,
 # mode='blocks': the job loop over barrier jobs on a CSR-block layout
 # --------------------------------------------------------------------------
 
-def _dense_ids(spark, universe: DataFrame, path: str) -> tuple[DataFrame, int]:
-    """Numbers the ``(node_id)`` rows of ``universe`` 0..n-1 in sorted
-    order and writes ``(node_id, idx)`` to ``path``; returns the re-read
-    map and n.  No single-partition global window (VERDICT.md round-1
-    "What's wrong" #6): range-partition + sort-within, then idx =
-    per-partition offset + local row_number.  The mapping equals the
-    global sorted rank wherever the range boundaries fall, so layouts
-    built on it are deterministic."""
+def _rank_rows(spark, df: DataFrame, order: list, path: str,
+               weight: str | None = None) -> tuple[DataFrame, int, int]:
+    """Writes ``df`` to ``path`` with ``idx``, each row's 0-based rank by
+    ``order`` (unique per row), and, given a ``weight`` column, ``cum``,
+    the sum of ``weight`` over the rows ranked before it.  Returns the
+    re-read frame, the row count and the ``weight`` total.
+
+    No single-partition global window (VERDICT.md round-1 "What's wrong"
+    #6): range-partition + sort-within, collect each partition's row
+    count and weight sum, then rank = partition offset + local
+    row_number.  The ranks equal the global sorted ranks wherever the
+    range boundaries fall, so layouts built on them are deterministic."""
     parted = (
-        universe.repartitionByRange(max(spark.sparkContext.defaultParallelism, 8), "node_id")
-        .sortWithinPartitions("node_id")
+        df.repartitionByRange(max(spark.sparkContext.defaultParallelism, 8), *order)
+        .sortWithinPartitions(*order)
         .withColumn("pid", F.spark_partition_id())
         .persist()
     )
-    sizes = {r["pid"]: r["cnt"] for r in parted.groupBy("pid").agg(
-        F.count(F.lit(1)).alias("cnt")).collect()}
-    offsets, n = [], 0
-    for p in sorted(sizes):
-        offsets.append((p, n))
-        n += sizes[p]
-    off_df = spark.createDataFrame(offsets, "pid int, off long")
-    wp = Window.partitionBy("pid").orderBy("node_id")
-    (
-        parted.withColumn("rn", F.row_number().over(wp))
-        .join(F.broadcast(off_df), "pid")
-        .select("node_id", (F.col("off") + F.col("rn") - 1).alias("idx"))
-        .write.mode("overwrite").parquet(path)
-    )
-    parted.unpersist()
-    return spark.read.parquet(path), n
+    try:
+        offsets, n, total = [], 0, 0
+        for r in sorted(parted.groupBy("pid").agg(
+                F.count(F.lit(1)).alias("cnt"), F.sum(weight or F.lit(0)).alias("s")).collect()):
+            offsets.append((r["pid"], n, total))
+            n, total = n + r["cnt"], total + r["s"]
+        off_df = spark.createDataFrame(offsets, "pid int, roff long, coff long")
+        w = Window.partitionBy("pid").orderBy(*order)
+        cols = [*df.columns, (F.col("roff") + F.row_number().over(w) - 1).alias("idx")]
+        if weight:
+            cols.append((F.col("coff") + F.sum(weight).over(w) - F.col(weight)).alias("cum"))
+        parted.join(F.broadcast(off_df), "pid").select(*cols).write.mode(
+            "overwrite").parquet(path)
+    finally:
+        parted.unpersist()
+    return spark.read.parquet(path), n, total
+
+
+def _dense_ids(spark, universe: DataFrame, path: str) -> tuple[DataFrame, int]:
+    """Numbers the ``(node_id)`` rows of ``universe`` 0..n-1 in sorted
+    order and writes ``(node_id, idx)`` to ``path``; returns the re-read
+    map and n."""
+    return _rank_rows(spark, universe, ["node_id"], path)[:2]
 
 
 def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
@@ -831,10 +846,10 @@ def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
 # --------------------------------------------------------------------------
 
 def _assign_blocks_distributed(spark, sym, norm, out_dir, n, n_blocks):
-    """Degree-aware dst→block assignment with NO per-node driver pass
-    (VERDICT r3 "What's wrong" #1 — the exact-LPT variant collects an
-    O(V) in-degree relation and runs a per-node Python heap loop, which
-    at 10^9 nodes is tens of driver GB and hours).
+    """Degree-aware dst→block assignment with no per-node driver pass: an
+    exact LPT pack collects an O(V) in-degree relation and runs a
+    per-node Python heap loop, which at 10^9 nodes is tens of driver GB
+    and hours (VERDICT r3 "What's wrong" #1).
 
     Three pieces, all bounded or distributed:
 
@@ -844,13 +859,12 @@ def _assign_blocks_distributed(spark, sym, norm, out_dir, n, n_blocks):
        edges), so they are placed greedily onto the least-loaded block
        exactly as the full LPT would.
     2. **Cumulative-degree range split of the remainder** — global
-       degree-desc rank and running degree sum via range partitioning +
-       per-partition offsets (the same deterministic pattern as the
-       string-id densifier; no single-partition window), then each node
-       maps to the block whose residual-capacity interval its cumulative
-       position falls in (a 64-row broadcast range join).  Per-block
-       load error ≤ the largest non-hub degree — tiny once the true
-       hubs are peeled off in step 1.
+       degree-desc rank and running degree sum by :func:`_rank_rows`
+       (no single-partition window), then each node maps to the block
+       whose residual-capacity interval its cumulative position falls in
+       (a broadcast range join over ``n_blocks`` rows).  Per-block load
+       error ≤ the largest non-hub degree — tiny once the true hubs are
+       peeled off in step 1.
     3. **perm sidecar** — original→relabeled id permutation, an O(V)
        int64 array the superstep driver needs anyway (same memory
        envelope as one rank vector).  Built VECTORIZED from the
@@ -860,118 +874,64 @@ def _assign_blocks_distributed(spark, sym, norm, out_dir, n, n_blocks):
 
     Returns ``(relabeled norm, block_sizes, perm)``.
     """
-    import glob as _glob
-    import heapq
-    import os as _os
-
-    import pyarrow.parquet as _pq
+    import pyarrow.parquet as pq
 
     indeg = sym.groupBy(F.col("dst").cast("long").alias("dst")).agg(
         F.count(F.lit(1)).alias("c")).persist()
-    total = indeg.agg(F.sum("c").alias("t")).collect()[0]["t"] or 0
-    n_dst = indeg.count()
+    rank_path = os.path.join(out_dir, "dst_rank")
+    try:
+        # 1) exact LPT over the top-K hubs (constant-size collect)
+        hubs = indeg.orderBy(F.desc("c"), F.asc("dst")).limit(4 * n_blocks).collect()
+        heap = [(0, b) for b in range(n_blocks)]
+        heapq.heapify(heap)
+        hub_rows: list[tuple[int, int, int]] = []
+        hub_loads, hub_counts = [0] * n_blocks, [0] * n_blocks
+        for r in hubs:  # already degree-desc
+            load, b = heapq.heappop(heap)
+            hub_rows.append((r["dst"], b, hub_counts[b]))
+            hub_counts[b] += 1
+            hub_loads[b] += r["c"]
+            heapq.heappush(heap, (load + r["c"], b))
 
-    # 1) exact LPT over the top-K hubs (constant-size collect)
-    K = int(min(4 * n_blocks, n_dst))
-    hubs = indeg.orderBy(F.desc("c"), F.asc("dst")).limit(K).collect()
-    target = total / n_blocks if n_blocks else 0.0
-    heap = [(0.0, b) for b in range(n_blocks)]
-    heapq.heapify(heap)
-    hub_rows: list[tuple[int, int, int]] = []
-    hub_loads = [0.0] * n_blocks
-    hub_counts = [0] * n_blocks
-    for r in hubs:  # already degree-desc
-        load, b = heapq.heappop(heap)
-        hub_rows.append((int(r["dst"]), b, hub_counts[b]))
-        hub_counts[b] += 1
-        hub_loads[b] += float(r["c"])
-        heapq.heappush(heap, (load + float(r["c"]), b))
-
-    # 2) remainder: distributed global degree-desc rank + cumulative sum
-    hub_df = spark.createDataFrame([(d,) for d, _b, _l in hub_rows],
-                                   "dst long")
-    rest = indeg.join(F.broadcast(hub_df), "dst", "left_anti")
-    n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    parted = (
-        rest.repartitionByRange(n_parts, F.desc("c"), F.asc("dst"))
-        .sortWithinPartitions(F.desc("c"), F.asc("dst"))
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    stats = {r["pid"]: (r["cnt"], r["s"]) for r in parted.groupBy("pid").agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("c").alias("s")).collect()}
-    rank_off, cum_off, ro, co = {}, {}, 0, 0
-    for p in sorted(stats):
-        rank_off[p], cum_off[p] = ro, co
-        ro += int(stats[p][0])
-        co += int(stats[p][1])
-    total_rest = co
-    rest_counts: dict[int, int] = {}
-    if total_rest:
-        off_df = spark.createDataFrame(
-            [(p, rank_off[p], cum_off[p]) for p in sorted(stats)],
-            "pid int, roff long, coff long")
-        w = Window.partitionBy("pid").orderBy(F.desc("c"), F.asc("dst"))
-        ranked = (
-            parted.withColumn("rn", F.row_number().over(w))
-            .withColumn("crun", F.sum("c").over(w))
-            .join(F.broadcast(off_df), "pid")
-            .select("dst",
-                    (F.col("roff") + F.col("rn") - 1).alias("grank"),
-                    (F.col("coff") + F.col("crun") - F.col("c")).alias("cum"))
-        )
-        # residual-capacity intervals: blocks already hub-heavy get less
-        resid = np.maximum(target - np.asarray(hub_loads), 0.0)
-        if resid.sum() <= 0:
-            resid = np.ones(n_blocks)
-        resid = resid * (total_rest / resid.sum())
-        bounds = np.concatenate([[0.0], np.cumsum(resid)])
-        bounds[-1] = float(total_rest) + 1.0  # close the top end exactly
-        bdf = spark.createDataFrame(
-            [(b, float(bounds[b]), float(bounds[b + 1])) for b in range(n_blocks)],
-            "block int, lo double, hi double")
-        assigned = ranked.join(
-            F.broadcast(bdf),
-            (F.col("cum") >= F.col("lo")) & (F.col("cum") < F.col("hi"))
-        ).persist()
-        # cum is strictly monotone in grank, so each block's nodes form a
-        # contiguous rank interval → local slot = hubs + (grank - first)
-        agg = {r["block"]: (int(r["m"]), int(r["cnt"])) for r in
-               assigned.groupBy("block").agg(
-                   F.min("grank").alias("m"),
-                   F.count(F.lit(1)).alias("cnt")).collect()}
-        rest_counts = {b: c for b, (_m, c) in agg.items()}
-        base_df = spark.createDataFrame(
-            [(b, agg.get(b, (0, 0))[0], hub_counts[b]) for b in range(n_blocks)],
-            "block int, first long, hub_cnt long")
-        rest_map = assigned.join(F.broadcast(base_df), "block").select(
-            "dst", "block",
-            (F.col("hub_cnt") + F.col("grank") - F.col("first")).alias("loc"))
-    else:
-        rest_map = spark.createDataFrame([], "dst long, block int, loc long")
-    hub_map = spark.createDataFrame(list(hub_rows),
-                                    "dst long, block int, loc long")
-    block_sizes = [hub_counts[b] + int(rest_counts.get(b, 0))
-                   for b in range(n_blocks)]
+        # 2) remainder: distributed global degree-desc rank + cumulative sum
+        hub_df = spark.createDataFrame([(d,) for d, _b, _l in hub_rows], "dst long")
+        ranked, _, total_rest = _rank_rows(
+            spark, indeg.join(F.broadcast(hub_df), "dst", "left_anti"),
+            [F.desc("c"), F.asc("dst")], rank_path, weight="c")
+    finally:
+        indeg.unpersist()
+    # residual-capacity intervals: blocks already hub-heavy get less
+    resid = np.maximum((total_rest + sum(hub_loads)) / n_blocks - np.asarray(hub_loads), 0.0)
+    if resid.sum() <= 0:
+        resid = np.ones(n_blocks)
+    bounds = np.concatenate([[0.0], np.cumsum(resid * (total_rest / resid.sum()))])
+    bounds[-1] = float(total_rest) + 1.0  # close the top end exactly
+    bdf = spark.createDataFrame(
+        [(b, float(bounds[b]), float(bounds[b + 1])) for b in range(n_blocks)],
+        "block int, lo double, hi double")
+    assigned = ranked.join(
+        F.broadcast(bdf), (F.col("cum") >= F.col("lo")) & (F.col("cum") < F.col("hi")))
+    # cum is strictly monotone in idx, so each block's nodes form a
+    # contiguous rank interval → local slot = hubs + (idx - first)
+    first = {r["block"]: (r["m"], r["cnt"]) for r in assigned.groupBy("block").agg(
+        F.min("idx").alias("m"), F.count(F.lit(1)).alias("cnt")).collect()}
+    block_sizes = [hub_counts[b] + first.get(b, (0, 0))[1] for b in range(n_blocks)]
     offs = np.zeros(n_blocks + 1, dtype=np.int64)
     offs[1:] = np.cumsum(block_sizes)
-    offs_df = spark.createDataFrame(
-        [(b, int(offs[b])) for b in range(n_blocks)], "block int, off long")
-    full_map = (
-        rest_map.unionByName(hub_map)
-        .join(F.broadcast(offs_df), "block")
-        .select("dst", "block", F.col("loc").cast("long").alias("loc"),
-                (F.col("off") + F.col("loc")).alias("new_id"))
+    base_df = spark.createDataFrame(
+        [(b, hub_counts[b] - first.get(b, (0, 0))[0], int(offs[b])) for b in range(n_blocks)],
+        "block int, lbase long, off long")
+    hub_map = spark.createDataFrame([(d, b, loc, int(offs[b])) for d, b, loc in hub_rows],
+                                    "dst long, block int, loc long, off long")
+    map_path = os.path.join(out_dir, "dst_map")
+    (
+        assigned.join(F.broadcast(base_df), "block")
+        .select("dst", "block", (F.col("lbase") + F.col("idx")).alias("loc"), "off")
+        .unionByName(hub_map)
+        .select("dst", "block", "loc", (F.col("off") + F.col("loc")).alias("new_id"))
+        .write.mode("overwrite").parquet(map_path)
     )
-    map_path = _os.path.join(out_dir, "dst_map")
-    full_map.write.mode("overwrite").parquet(map_path)
-    parted.unpersist()
-    indeg.unpersist()
-    if total_rest:
-        # full_map is on parquet now — nothing downstream reads `assigned`,
-        # and the one-time layout job must not leak cached blocks into the
-        # session (ADVICE r4 item 4)
-        assigned.unpersist()
+    shutil.rmtree(rank_path)
 
     mp = spark.read.parquet(map_path)
     norm = (
@@ -989,8 +949,8 @@ def _assign_blocks_distributed(spark, sym, norm, out_dir, n, n_blocks):
 
     # 3) perm sidecar, vectorized (no toPandas, no Python loop)
     perm = np.full(n, -1, dtype=np.int64)
-    for fpath in sorted(_glob.glob(_os.path.join(map_path, "*.parquet"))):
-        t = _pq.read_table(fpath, columns=["dst", "new_id"])
+    for fpath in sorted(glob.glob(os.path.join(map_path, "*.parquet"))):
+        t = pq.read_table(fpath, columns=["dst", "new_id"])
         perm[t["dst"].to_numpy()] = t["new_id"].to_numpy()
     iso = np.flatnonzero(perm < 0)
     perm[iso] = np.arange(offs[-1], offs[-1] + len(iso))
@@ -1004,7 +964,6 @@ def prepare_csr_blocks(
     n_blocks: int,
     int_ids: int,
     unit_weights: bool = False,
-    lpt_node_limit: int = 2_000_000,
 ) -> dict:
     """One-time physical layout for :func:`ppr_from_blocks`: symmetrize
     (without pair-dedup — duplicate rows sum naturally inside the bincount
@@ -1025,16 +984,18 @@ def prepare_csr_blocks(
     The out-weight side joins broadcast (``n_nodes`` rows), so the only
     full shuffle is the one-time re-block write.
 
-    Destinations are packed by in-degree.  At or below ``lpt_node_limit``
-    nodes this is the exact driver-side LPT bin-pack (optimal balance; an
-    O(V) pandas + heap pass, fine to a few million nodes).  Above it the
-    assignment is computed with DataFrame ops only — exact LPT over the
-    top ``4*n_blocks`` hubs (constant-size collect) + cumulative-degree
-    range splitting of the remainder sized by each block's residual
-    capacity — so no per-node relation ever lands on the driver (VERDICT
-    r3 "What's wrong" #1: at 10^9 nodes the LPT pass is tens of driver GB
-    and hours of Python).  Balance: distributed is within ``max(non-hub
-    degree)`` edges of LPT per block.
+    Destinations are packed by in-degree with DataFrame ops only
+    (:func:`_assign_blocks_distributed`): exact LPT over the top
+    ``4*n_blocks`` hubs (constant-size collect) + cumulative-degree range
+    splitting of the remainder sized by each block's residual capacity,
+    so no per-node relation ever lands on the driver.  Balance: each
+    block is within ``max(non-hub degree)`` edges of an exact LPT pack.
+    Relabeling makes global index = block offset + local slot: every
+    task's contribution slice then lands in ONE contiguous span of the
+    rank vector, and peer-slice assembly is a sequential memcpy instead
+    of a random scatter.  ``perm.npy`` maps original → relabeled ids;
+    reset vectors translate on the way in, scores on the way out, so
+    callers never see the internal numbering.
 
     This is the write-once layout a 10^12-edge deployment would keep as a
     bucketed Iceberg table: supersteps never reshuffle edges, they stream
@@ -1053,9 +1014,6 @@ def prepare_csr_blocks(
     scalar aggregates) and is the no-driver-state alternative at any
     node count.
     """
-    import json as _json
-    import os as _os
-
     fwd = edges.select("src", "dst", "weight")
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
     sym = fwd.unionByName(rev)
@@ -1080,70 +1038,10 @@ def prepare_csr_blocks(
             (F.col("weight") / F.col("out_w")).alias("wn"),
         )
 
-    npy_dir = _os.path.join(out_dir, "npy")
-    _os.makedirs(npy_dir, exist_ok=True)
-    block_sizes: list[int] = []
-    if n > lpt_node_limit:
-        norm, block_sizes, perm = _assign_blocks_distributed(
-            spark, sym, norm, out_dir, n, n_blocks)
-        np.save(_os.path.join(npy_dir, "perm.npy"), perm)
-    else:
-        # ---- degree-aware balanced dst→block assignment (hub skew) ----
-        # Hub destinations make equal-width id ranges unequal blocks; at
-        # P cores the superstep waits for the heaviest block.  LPT
-        # bin-packing of dsts by in-degree equalizes per-block edge
-        # counts explicitly (the north_rule's "skewed hubs
-        # range-partitioned explicitly").  The in-degree aggregate is one
-        # map-side-combined groupBy; the assignment itself is an
-        # O(V log B) driver pass.
-        import heapq
-
-        indeg = sym.groupBy("dst").agg(F.count(F.lit(1)).alias("c")).toPandas()
-        dsts = indeg["dst"].to_numpy(dtype=np.int64)
-        cnts = indeg["c"].to_numpy(dtype=np.int64)
-        order = np.argsort(-cnts, kind="stable")
-        block_of = np.empty(len(dsts), dtype=np.int32)
-        loc_of = np.empty(len(dsts), dtype=np.int64)
-        heap = [(0, b) for b in range(n_blocks)]
-        heapq.heapify(heap)
-        fill = [0] * n_blocks
-        for i in order:
-            load, b = heapq.heappop(heap)
-            block_of[i] = b
-            loc_of[i] = fill[b]
-            fill[b] += 1
-            heapq.heappush(heap, (load + int(cnts[i]), b))
-        # ---- identity-permutation relabeling ----
-        # Renumber nodes so global index = (block offset + local slot):
-        # every task's contribution slice then lands in ONE contiguous
-        # span of the rank vector and peer-slice assembly is a sequential
-        # memcpy instead of a random fancy-scatter (the scatter was the
-        # dominant non-kernel cost at 32-way).  perm.npy maps original →
-        # relabeled ids; reset vectors translate on the way in, scores on
-        # the way out, so callers never see the internal numbering.
-        for b in range(n_blocks):
-            block_sizes.append(int((block_of == b).sum()))
-        offs = np.zeros(n_blocks + 1, dtype=np.int64)
-        offs[1:] = np.cumsum(block_sizes)
-        perm = np.full(n, -1, dtype=np.int64)
-        perm[dsts] = offs[block_of] + loc_of
-        isolated = np.flatnonzero(perm < 0)  # no in-edges: tail positions
-        perm[isolated] = np.arange(offs[-1], offs[-1] + len(isolated))
-        np.save(_os.path.join(npy_dir, "perm.npy"), perm)
-        map_pdf = pd.DataFrame(
-            {"dst_idx": dsts.astype(np.int32), "block": block_of,
-             "dst_loc": loc_of.astype(np.int32)}
-        )
-        map_df = spark.createDataFrame(map_pdf)
-        smap_df = spark.createDataFrame(pd.DataFrame(
-            {"src_idx": np.arange(n, dtype=np.int32),
-             "src_new": perm.astype(np.int32)}
-        ))
-        norm = (
-            norm.join(F.broadcast(map_df), "dst_idx").drop("dst_idx")
-            .join(F.broadcast(smap_df), "src_idx").drop("src_idx")
-            .withColumnRenamed("src_new", "src_idx")
-        )
+    npy_dir = os.path.join(out_dir, "npy")
+    os.makedirs(npy_dir, exist_ok=True)
+    norm, block_sizes, perm = _assign_blocks_distributed(spark, sym, norm, out_dir, n, n_blocks)
+    np.save(os.path.join(npy_dir, "perm.npy"), perm)
     (
         norm.repartition(n_blocks, "block")
         .write.mode("overwrite")
@@ -1159,11 +1057,9 @@ def prepare_csr_blocks(
     # mmap_mode='r' — zero-copy views over the (shared) OS page cache, so
     # N workers hold the edge data once, with no per-task decode or
     # first-touch page-fault churn.  Parquet remains the portable source.
-    import glob as _glob
-
     cols = ["src_idx", "dst_loc"] + ([] if unit else ["wn"])
     bf: dict[int, list[str]] = {}
-    for p in _glob.glob(f"{out_dir}/blocks/block=*/*.parquet"):
+    for p in glob.glob(f"{out_dir}/blocks/block=*/*.parquet"):
         b = int(p.split("block=")[1].split("/")[0])
         bf.setdefault(b, []).append(p)
 
@@ -1188,7 +1084,7 @@ def prepare_csr_blocks(
                     # block-local index fits uint16 → 25% less streamed
                     # bytes per edge in the superstep kernel
                     a = a.astype(np.uint16)
-                np.save(_os.path.join(_dir, f"block_{bid}_{c}.npy"), a)
+                np.save(os.path.join(_dir, f"block_{bid}_{c}.npy"), a)
             yield bid
 
     converted = (
@@ -1200,8 +1096,8 @@ def prepare_csr_blocks(
             "unit_weights": unit, "npy_blocks": int(converted),
             "layout": "relabeled", "block_sizes": block_sizes,
             "offsets": [int(x) for x in np.cumsum([0] + block_sizes[:-1])]}
-    with open(_os.path.join(out_dir, "meta.json"), "w") as f:
-        _json.dump(meta, f)
+    with open(os.path.join(out_dir, "meta.json"), "w") as f:
+        json.dump(meta, f)
     return meta
 
 
@@ -1211,11 +1107,8 @@ def _load_blocks_ctx(spark: SparkSession, blocks_dir: str) -> dict:
     out-weight sidecar as a dangling mask and 1/out_w.  Raises
     ``ValueError`` on a layout other than the ``relabeled`` one
     :func:`prepare_csr_blocks` writes."""
-    import glob
-    import json as _json
-
     with open(os.path.join(blocks_dir, "meta.json")) as f:
-        meta = _json.load(f)
+        meta = json.load(f)
     n = int(meta["n_nodes"])
     layout = meta.get("layout")
     if layout != "relabeled":

@@ -225,14 +225,16 @@ def test_batch_matches_single_query_runs(spark):
 
 
 def test_batch_dataframe_checkpoint_resume(spark, tmp_path):
+    from hipporag_spark.checkpoint import CheckpointStore
     from hipporag_spark.ppr import personalized_pagerank_batch
 
     _, edges, _, rdf = _batch_inputs(spark)
     ckpt = str(tmp_path / "batch_ckpt")
-    # truncated run leaves a checkpoint behind
+    # truncated run leaves a checkpoint behind, at its last superstep
     personalized_pagerank_batch(spark, edges, rdf, damping=0.5, tol=1e-12,
                                 mode="dataframe", max_iter=6,
                                 checkpoint_dir=ckpt, checkpoint_every=2)
+    assert CheckpointStore(ckpt).latest_step() == 5
     resumed = personalized_pagerank_batch(spark, edges, rdf, damping=0.5, tol=1e-12,
                                           mode="dataframe",
                                           checkpoint_dir=ckpt, resume=True)

@@ -233,11 +233,10 @@ def test_batched_isolated_ids_blend(spark, tmp_path, monkeypatch):
 @pytest.mark.parametrize("unit", [True, False])
 def test_blocks_distributed_assignment_matches_reference(spark, tmp_path, unit,
                                                          monkeypatch):
-    """The distributed assignment (the large-V path: hub-LPT + cumulative-
-    degree range split, VERDICT r3 item 2) must (a) never collect a
-    per-node relation to the driver — toPandas is poisoned for the whole
-    prepare call — and (b) produce a layout whose PPR scores match the
-    exact reference, like the LPT layout does."""
+    """The block assignment (hub-LPT + cumulative-degree range split,
+    VERDICT r3 item 2) must (a) never collect a per-node relation to the
+    driver — toPandas is poisoned for the whole prepare call — and (b)
+    produce a layout whose PPR scores match the exact reference."""
     import pyspark.sql as pssql
 
     edges = _random_edges(spark, seed=5, weighted=not unit)
@@ -249,7 +248,7 @@ def test_blocks_distributed_assignment_matches_reference(spark, tmp_path, unit,
     monkeypatch.setattr(pssql.DataFrame, "toPandas", _boom)
     try:
         meta = prepare_csr_blocks(spark, edges, out, n_blocks=4, int_ids=N,
-                                  unit_weights=unit, lpt_node_limit=0)
+                                  unit_weights=unit)
     finally:
         monkeypatch.undo()
     assert meta["layout"] == "relabeled"
@@ -281,7 +280,7 @@ def test_blocks_distributed_assignment_is_balanced(spark, tmp_path):
     edges = spark.createDataFrame(pdf)
     out = str(tmp_path / "blocks_skew")
     prepare_csr_blocks(spark, edges, out, n_blocks=8, int_ids=N,
-                       unit_weights=True, lpt_node_limit=0)
+                       unit_weights=True)
     per_block = {
         r["block"]: r["cnt"]
         for r in spark.read.parquet(f"{out}/blocks")
